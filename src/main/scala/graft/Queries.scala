@@ -751,16 +751,17 @@ object Queries {
         .select(col("o_custkey"), round(col("sum_total"), 2).as("sum_total"))
     },
 
-    // §2.19: slice reuse — coarsen a persisted finer slice (ManipulateSlice)
+    // §2.19: slice reuse — the board answers the coarser query by
+    // re-aggregating its cached finer slice (ManipulateSlice)
     "q16_reagg" -> oq(
       """SELECT CAST(date_trunc('year', o_orderdate) AS DATE) AS o_orderdate_year,
         |round(sum(o_totalprice),2) AS sum_total, count(*) AS n_orders
         |FROM orders GROUP BY 1""") { (s, dir) =>
-      val fine = CubeQuery().addAxis("o_orderdate_year").addAxis("o_orderdate_month")
-        .addValue("sum_total").addValue("n_orders")
-      val finer = Slicer.slice(ord(s, dir), Tpch.ordersCube, fine)
-      Slicer.Reagg.from(finer, Seq("o_orderdate_year"),
-          Seq("sum_total" -> Agg.Sum, "n_orders" -> Agg.Count))
+      val board = new CuttingBoard(ord(s, dir), Tpch.ordersCube)
+      board.slice(CubeQuery().addAxis("o_orderdate_year").addAxis("o_orderdate_month")
+        .addValue("sum_total").addValue("n_orders"))
+      board.slice(CubeQuery().addAxis("o_orderdate_year")
+          .addValue("sum_total").addValue("n_orders"))
         .select(col("o_orderdate_year"), round(col("sum_total"), 2).as("sum_total"), col("n_orders"))
     },
 

@@ -18,15 +18,15 @@ import org.apache.spark.storage.StorageLevel
   *    finer slice is maybe 10⁶ rows while the base is 10¹²; every
   *    dashboard drill-down after the first scan is served from it.
   *
-  * Directly re-aggregatable measures (Sum/Min/Max/Count/UnionSet) merge
-  * their finished values from a coarser-than-cached query; the quotient
-  * accumulators Avg/StdDev/RatioSum are served through the hidden
-  * companion columns every cached slice carries ([[companionAggs]]):
-  * the components (Σx, Σx², counts) re-aggregate additively and the
-  * finished quotient is rebuilt after the merge — never avg-of-avgs.
-  * Only GroupConsistent and the distinct-count family fall through to
-  * the base scan (no bounded cached form merges them), exactly as a
-  * correct materialized-view rewriter must.
+  * [[Agg]] owns the merge rules, and the board runs its one merge
+  * ([[Agg.merge]]) for both a coarser-than-cached query and `append`:
+  * Sum/Min/Max/Count/Union merge their finished values; the quotient
+  * accumulators Avg/StdDev/RatioSum merge through the hidden companion
+  * columns every cached slice carries ([[Agg.companions]]) and are
+  * rebuilt after the merge — never avg-of-avgs. Only GroupConsistent
+  * and the distinct-count family fall through to the base scan (no
+  * bounded cached form merges them), exactly as a correct
+  * materialized-view rewriter must.
   *
   * Persistence: with `warehouseDir` set, every cached slice is ALSO
   * written as a parquet table named by a fingerprint of its query (plus a
@@ -85,8 +85,11 @@ final class CuttingBoard(
     */
   private final case class Cached(q: CubeQuery, df: DataFrame, rows: Long) {
     // width from the QUERY, not the frame: cached frames carry hidden
-    // maintenance companions (__m_*) that reuse never reads, and the
-    // cost score must keep mirroring the reference's visible-cell count
+    // maintenance companions (__m_*) that the cost score must not count
+    // — it keeps mirroring the reference's visible-cell count. Every
+    // frame cached here carries the full companion set of its query's
+    // measures (materialize rides companionAggs, reload checks for it,
+    // maintenance keeps the layout), so reuse never re-checks columns.
     val width: Int = q.axes.length + math.max(q.valuesInSlice.length, 1)
     def cost: Long = rows * width
   }
@@ -142,7 +145,7 @@ final class CuttingBoard(
           // agg change) is skipped (recompute is always sound) rather
           // than cached as a frame the append/delete paths cannot
           // maintain
-          if (companionCols(q.valuesInSlice).forall(reread.columns.contains)) {
+          if (Agg.companions(specs(q.valuesInSlice)).forall(c => reread.columns.contains(c._1))) {
             val df = reread.persist(storageLevel)
             cache = cache :+ Cached(q, df, rows)
           }
@@ -277,84 +280,44 @@ final class CuttingBoard(
   /** Incremental maintenance: the dataset grows by `delta` and every
     * cached slice is brought current WITHOUT touching the (100 TB) base
     * table — the materialized-view maintenance step. A slice is
-    * maintainable when every measure is merge-capable from its CACHED
-    * form: directly for Sum/Count/Min/Max/Union (the same set the
-    * drill-down reuse path re-aggregates), and through the hidden
-    * companion columns ([[companionAggs]]) for the quotient accumulators
-    * Avg/StdDev/RatioSum — their components (sum, count, sum²) merge
-    * additively and the finished quotient is rebuilt after the merge, so
-    * they too update at cost ∝ |delta| + |slice|, never ∝ |base|. Only
-    * GroupConsistent (and the distinct-count family) still evicts: its
-    * finished value cannot be merged and no bounded companion exists
-    * (all-agree-else-null needs the group's value multiset). Evicted
-    * slices delete their warehouse tables and manifests so a future
-    * board cannot reload a stale materialization, and recompute on next
-    * touch. A values-less query (the reference's default row count)
-    * maintains too: its synthetic "count" column merges like Agg.Count.
+    * maintainable when every measure is [[Agg.mergeable]] (the same set
+    * the drill-down reuse path re-aggregates): the slice is re-merged at
+    * its own grain over cached ∪ delta-slice by the same [[Agg.merge]],
+    * so quotients update through their companions too, at cost ∝
+    * |delta| + |slice|, never ∝ |base|. Only GroupConsistent (and the
+    * distinct-count family) still evicts: its finished value cannot be
+    * merged and no bounded companion exists (all-agree-else-null needs
+    * the group's value multiset). Evicted slices delete their warehouse
+    * tables and manifests so a future board cannot reload a stale
+    * materialization, and recompute on next touch. A values-less query
+    * (the reference's default row count) maintains too: its synthetic
+    * "count" column merges like Agg.Count.
     *
     * The delta must carry the base schema (unionByName). Counts stay
     * exact: a delta row lands in exactly one group of each slice, and
-    * the merge rules are the accumulators' own merge semantics. The
-    * rebuilt StdDev uses the closed form √((Σx² − (Σx)²/n)/(n−1))
-    * (clamped at 0 for FP dust on near-constant groups): same value as
-    * stddev_samp up to FP associativity — bit-exact on exactly-
-    * representable data, last-ulp on arbitrary doubles, the tolerance
-    * any distributed stddev already carries across partitionings.
+    * the merge rules are the accumulators' own merge semantics.
     */
   def append(delta: DataFrame): Unit = synchronized {
     current = current.unionByName(delta)
-    cache = cache.flatMap { c =>
-      val vals = c.q.valuesInSlice
-      if (!vals.forall(mergeableFromCache)) {
-        c.df.unpersist()
-        dropPersisted(c.q)
-        None
-      } else {
-        // a values-less query slices to the reference's default row
-        // count — a synthetic Count measure named "count", maintainable
-        // like any other (the __m_n companion is its support on delete)
-        val measureCols = if (vals.nonEmpty) vals else Vector("count")
-        def aggOf(v: String): Agg =
-          if (vals.isEmpty) Agg.Count else cubedef.measure(v).agg
-        val deltaSlice = Slicer.slice(delta, cubedef, c.q,
-            extraAggs = companionAggs(vals))
-          .select(c.df.columns.map(col): _*)
-        val aggs = measureCols.map { v =>
-          (aggOf(v) match {
-            case Agg.Count              => sum(col(v))
-            case Agg.UnionIncludedEmpty => max(col(v))
-            // quotient placeholders: rebuilt from merged companions below
-            case Agg.Avg | Agg.StdDev | Agg.Ratio(_, _) => first(col(v))
-            case other                  => other.compile(col(v))
-          }).as(v)
-        } ++ companionCols(vals).map(cn => sum(col(cn)).as(cn))
-        val axisCols = c.q.axes.map(col)
-        val union = c.df.unionByName(deltaSlice)
-        val merged0 = union.groupBy(axisCols: _*).agg(aggs.head, aggs.tail: _*)
-        val merged = measureCols.foldLeft(merged0) { (acc, v) =>
-          finishedFromCompanions(v, aggOf(v)).fold(acc)(f => acc.withColumn(v, f))
-        }.select(c.df.columns.map(col): _*)
-        val (persisted, rows) = materialize(c.q, merged)
-        c.df.unpersist()
-        Some(Cached(c.q, persisted, rows))
-      }
+    maintain(delta, _.mergeable) { (c, deltaSlice) =>
+      // the reuse merge at the slice's own grain, over cached ∪ delta
+      Agg.merge(c.df.unionByName(deltaSlice), c.q.axes.map(col), specs(c.q.valuesInSlice))
     }
-    gcWarehouse(pinnedFingerprints)
   }
 
   /** Incremental DELETE maintenance — the takedown face of [[append]]:
     * the dataset shrinks by `deleted` and every cached slice is brought
     * current without touching the (100 TB) base table. A slice whose
-    * measures are all INVERTIBLE is updated at delta cost: slice the
-    * deleted rows with the slice's own query, left-join on the axes,
+    * measures are all [[Agg.invertible]] is updated at delta cost: slice
+    * the deleted rows with the slice's own query, left-join on the axes,
     * subtract. Invertible means the cached form is a linear sum of
     * per-row contributions: Sum and Count directly, and Avg/StdDev/
-    * RatioSum through their hidden companion columns ([[companionAggs]])
-    * — components subtract, the finished quotient is rebuilt after. The
-    * always-present __m_n companion (count(*)) is the SUPPORT indicator,
-    * so a group all of whose rows were deleted drops out entirely (a
-    * zero-support row would be observably wrong, not just stale) — a
-    * Sum-only slice no longer needs an explicit Count measure for that.
+    * RatioSum through their companions — components subtract, the
+    * finished quotient is rebuilt after. The always-present __m_n
+    * companion (count(*)) is the SUPPORT indicator, so a group all of
+    * whose rows were deleted drops out entirely (a zero-support row would
+    * be observably wrong, not just stale) — a Sum-only slice no longer
+    * needs an explicit Count measure for that.
     * Min/Max/Union/GroupConsistent (and the distinct-count family) still
     * evict + recompute on next touch: they are not invertible from any
     * bounded cached form (deleting the max leaves no way to find the
@@ -387,128 +350,72 @@ final class CuttingBoard(
         base.join(deleted.select(keyCols.map(col): _*).distinct(),
           keyCols, "left_anti")
       else base.exceptAll(deleted)
+    maintain(deletedRows, _.invertible) { (c, deltaSlice) =>
+      val ms = specs(c.q.valuesInSlice)
+      val axes = c.q.axes
+      // equi-join key even for the grand-total (axis-less) slice: a
+      // constant column keeps the plan a hash join, never a
+      // BroadcastNestedLoopJoin
+      val joinKeys = if (axes.nonEmpty) axes else Seq("__one")
+      val lhs = if (axes.nonEmpty) c.df else c.df.withColumn("__one", lit(1))
+      val rhs0 = if (axes.nonEmpty) deltaSlice
+        else deltaSlice.withColumn("__one", lit(1))
+      // subtracted columns: finished values that are linear on their own
+      // (Sum/Count) and every companion; quotients are rebuilt after
+      val subCols = ms.collect { case (v, _, a) if a.remerge.isDefined => v } ++
+        Agg.companions(ms).map(_._1)
+      val rhs = rhs0.select(joinKeys.map(k => col(k).as(s"__k_$k")) ++
+        subCols.map(v => col(v).as(s"__d_$v")): _*)
+      // null-SAFE key equality: a NULL group (null axis value) must
+      // still meet its delta row, or its measures silently stay stale
+      val joinCond = joinKeys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
+      val inverted = lhs.join(rhs, joinCond, "left")
+        .select(axes.map(col) ++ subCols.map(v => (col(v) - coalesce(col(s"__d_$v"),
+          lit(0).cast("long"))).as(v)): _*)
+      Agg.rebuilt(inverted, ms).where(col("__m_n") > 0)
+    }
+  }
+
+  /** Bring every cached slice current after its base rows changed by
+    * `rows`: `update` computes the new slice from the cached frame and
+    * `rows` sliced with the slice's own query (same wide layout); the
+    * result replaces the slice and its warehouse table. A slice with a
+    * measure failing `keep` is evicted instead, warehouse table included,
+    * and recomputes on next touch.
+    */
+  private def maintain(rows: DataFrame, keep: Agg => Boolean)(
+      update: (Cached, DataFrame) => DataFrame): Unit = {
     cache = cache.flatMap { c =>
-      val vals = c.q.valuesInSlice
-      val measureCols = if (vals.nonEmpty) vals else Vector("count")
-      def aggOf(v: String): Agg =
-        if (vals.isEmpty) Agg.Count else cubedef.measure(v).agg
-      val invertible = measureCols.forall(v => aggOf(v) match {
-        case Agg.Sum | Agg.Count | Agg.Avg | Agg.StdDev | Agg.Ratio(_, _) => true
-        case _ => false
-      })
-      if (!invertible) {
+      val layout = c.df.columns.map(col)
+      if (!specs(c.q.valuesInSlice).forall(m => keep(m._3))) {
         c.df.unpersist()
         dropPersisted(c.q)
         None
       } else {
-        val comps = companionCols(vals)
-        val deltaSlice = Slicer.slice(deletedRows, cubedef, c.q,
-            extraAggs = companionAggs(vals))
-          .select(c.df.columns.map(col): _*)
-        val axes = c.q.axes
-        // equi-join key even for the grand-total (axis-less) slice: a
-        // constant column keeps the plan a hash join, never a
-        // BroadcastNestedLoopJoin
-        val joinKeys = if (axes.nonEmpty) axes else Seq("__one")
-        val lhs = if (axes.nonEmpty) c.df else c.df.withColumn("__one", lit(1))
-        val rhs0 = if (axes.nonEmpty) deltaSlice
-          else deltaSlice.withColumn("__one", lit(1))
-        // subtracted columns: finished Sum/Count directly, quotient
-        // measures via their companions (finished value rebuilt below)
-        val subCols = measureCols.filter(v => aggOf(v) match {
-          case Agg.Sum | Agg.Count => true
-          case _ => false
-        }) ++ comps
-        val rhs = rhs0.select(joinKeys.map(k => col(k).as(s"__k_$k")) ++
-          subCols.map(v => col(v).as(s"__d_$v")): _*)
-        // null-SAFE key equality: a NULL group (null axis value) must
-        // still meet its delta row, or its measures silently stay stale
-        val joinCond = joinKeys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        val inverted0 = lhs.join(rhs, joinCond, "left")
-          .select(joinKeys.filterNot(_ == "__one").map(col) ++
-            measureCols.filterNot(subCols.contains).map(col) ++
-            subCols.map(v => (col(v) - coalesce(col(s"__d_$v"),
-              lit(0).cast("long"))).as(v)): _*)
-        val merged = measureCols.foldLeft(inverted0) { (acc, v) =>
-          finishedFromCompanions(v, aggOf(v)).fold(acc)(f => acc.withColumn(v, f))
-        }
-          .where(col("__m_n") > 0)
-          .select(c.df.columns.map(col): _*)
-        val (persisted, rows) = materialize(c.q, merged)
+        val deltaSlice = Slicer.slice(rows, cubedef, c.q,
+          extraAggs = companionAggs(c.q.valuesInSlice)).select(layout: _*)
+        val (persisted, n) = materialize(c.q, update(c, deltaSlice).select(layout: _*))
         c.df.unpersist()
-        Some(Cached(c.q, persisted, rows))
+        Some(Cached(c.q, persisted, n))
       }
     }
     gcWarehouse(pinnedFingerprints)
   }
 
-  /** Measures maintainable under [[append]] from the cached (wide) form:
-    * directly mergeable finished values, plus the quotient accumulators
-    * whose companions merge. GroupConsistent / the distinct-count family
-    * stay out — no bounded cached form merges them.
+  /** A slice's measures as the merge rules see them ([[Agg.Spec]]). A
+    * values-less query slices to the reference's default row count — a
+    * synthetic Count measure named "count".
     */
-  private def mergeableFromCache(name: String): Boolean =
-    cubedef.measure(name).agg match {
-      case Agg.Sum | Agg.Min | Agg.Max | Agg.Count | Agg.UnionSet |
-           Agg.UnionIncludedEmpty | Agg.Avg | Agg.StdDev | Agg.Ratio(_, _) => true
-      case _ => false
-    }
+  private def specs(vals: Vector[String]): Seq[Agg.Spec] =
+    if (vals.isEmpty) Seq(("count", lit(1), Agg.Count))
+    else vals.map { v => val m = cubedef.measure(v); (v, m.expr, m.agg) }
 
-  /** Hidden maintenance companions riding the cached slice's own groupBy
-    * (one pass, one shuffle — Slicer.slice's extraAggs): per-group
-    * count(*) (`__m_n`, the universal support indicator) plus, per
-    * quotient measure, the decomposed parts its finished value divides —
-    * Avg: Σx; StdDev: Σx, Σx², non-null n; RatioSum: Σnum, Σden. The
-    * components merge (append) and invert (delete) additively where the
-    * published quotient cannot, which is what makes Avg/StdDev/Ratio
-    * slices delta-maintainable instead of evict-and-recompute.
+  /** Hidden maintenance companions ([[Agg.companions]]) riding the
+    * cached slice's own groupBy — one pass, one shuffle (Slicer.slice's
+    * extraAggs).
     */
-  private def companionAggs(vals: Vector[String]): Seq[Column] = {
-    val per = vals.flatMap { v =>
-      cubedef.measure(v).agg match {
-        case Agg.Avg => Seq(sum(cubedef.measure(v).expr).as(s"__m_${v}_s"))
-        case Agg.StdDev =>
-          val e = cubedef.measure(v).expr.cast("double")
-          Seq(sum(e).as(s"__m_${v}_s"), sum(e * e).as(s"__m_${v}_s2"),
-            count(e).as(s"__m_${v}_nn"))
-        case Agg.Ratio(num, den) =>
-          Seq(sum(num).as(s"__m_${v}_sn"), sum(den).as(s"__m_${v}_sd"))
-        case _ => Seq.empty
-      }
-    }
-    count(lit(1)).as("__m_n") +: per
-  }
-
-  /** The companion column names [[companionAggs]] produces, in order. */
-  private def companionCols(vals: Vector[String]): Seq[String] =
-    "__m_n" +: vals.flatMap { v =>
-      cubedef.measure(v).agg match {
-        case Agg.Avg         => Seq(s"__m_${v}_s")
-        case Agg.StdDev      => Seq(s"__m_${v}_s", s"__m_${v}_s2", s"__m_${v}_nn")
-        case Agg.Ratio(_, _) => Seq(s"__m_${v}_sn", s"__m_${v}_sd")
-        case _               => Seq.empty
-      }
-    }
-
-  /** Rebuild a quotient measure's finished value from (already merged or
-    * inverted) companion columns; None for measures whose finished value
-    * is maintained directly. Avg divides by the TOTAL row count (the
-    * reference's Average contract); StdDev is the closed sample form
-    * clamped at 0 against FP dust, NULL below two samples (stddev_samp's
-    * contract); RatioSum is NULL on a zero or NULL denominator.
-    */
-  private def finishedFromCompanions(v: String, agg: Agg): Option[Column] =
-    agg match {
-      case Agg.Avg => Some(col(s"__m_${v}_s") / col("__m_n"))
-      case Agg.StdDev =>
-        val n = col(s"__m_${v}_nn")
-        val s = col(s"__m_${v}_s"); val s2 = col(s"__m_${v}_s2")
-        Some(when(n >= 2, sqrt(greatest((s2 - s * s / n) / (n - 1), lit(0.0)))))
-      case Agg.Ratio(_, _) =>
-        Some(when(col(s"__m_${v}_sd") =!= 0,
-          col(s"__m_${v}_sn") / col(s"__m_${v}_sd")))
-      case _ => None
-    }
+  private def companionAggs(vals: Vector[String]): Seq[Column] =
+    Agg.companions(specs(vals)).map { case (n, c) => c.as(n) }
 
   /** Materialize a computed slice: warehouse write + read-back when a
     * warehouse exists (the bytes survive the driver), plain persist
@@ -711,23 +618,6 @@ final class CuttingBoard(
   private def promote(i: Int): Unit =
     if (i > 0) cache = cache(i) +: (cache.take(i) ++ cache.drop(i + 1))
 
-  /** Can a wanted measure be re-aggregated to a coarser grain from this
-    * cached frame? Directly-mergeable finished values always; the
-    * quotient accumulators (Avg/StdDev/RatioSum) only when the frame
-    * carries their companion columns — every table THIS board writes
-    * does, but the check keeps an older-layout or hand-written frame
-    * from being served wrong (it falls through to the base scan, which
-    * is always sound).
-    */
-  private def reaggregatableFrom(name: String, cachedColumns: Array[String]): Boolean =
-    cubedef.measure(name).agg match {
-      case Agg.Sum | Agg.Min | Agg.Max | Agg.Count | Agg.UnionSet |
-           Agg.UnionIncludedEmpty => true
-      case Agg.Avg | Agg.StdDev | Agg.Ratio(_, _) =>
-        companionCols(Vector(name)).forall(cachedColumns.contains)
-      case _ => false
-    }
-
   private def truncExpr(unit: String, c: org.apache.spark.sql.Column) = unit match {
     case "day" => to_date(c)
     case u     => trunc(c, u)
@@ -820,23 +710,12 @@ final class CuttingBoard(
       val setAxesKept = cq.axes
         .filter(a => cubedef.hasLabel(a) && cubedef.label(a).isSet)
         .forall(q.axes.contains)
-      // a values-less query (the reference's default row count) re-sums
-      // the cached per-group __m_n support — present on EVERY frame this
-      // board holds (materialization always rides companionAggs, reload
-      // requires companionCols ⊆ columns); the check guards older-layout
-      // frames, which fall through to the (always sound) base scan. The
-      // visible "count" of a values-less slice is NOT an alternative
-      // source: a frame without __m_n could carry a user measure merely
-      // NAMED count, and summing it would serve an arbitrary sum as a
-      // row count.
-      val countable = q.valuesInSlice.nonEmpty ||
-        cache(i).df.columns.contains("__m_n")
-      setAxesKept && countable &&
+      setAxesKept &&
         q.axes.forall(a => overSlice(a, cq.axes).isDefined) &&
         cq.filters.toSet.subsetOf(q.filters.toSet) &&
         (q.filters.toSet -- cq.filters.toSet).forall(f => overSlice(f.name, cq.axes).isDefined) &&
         q.valuesInSlice.toSet.subsetOf(cq.valuesInSlice.toSet) &&
-        q.valuesInSlice.forall(v => reaggregatableFrom(v, cache(i).df.columns))
+        specs(q.valuesInSlice).forall(_._3.mergeable)
     }
     if (finerIdx.nonEmpty) {
       val best = finerIdx.minBy(i => (cache(i).cost, i))
@@ -851,34 +730,13 @@ final class CuttingBoard(
         acc.where(FilterOp.compile(f.op, overSlice(f.name, cq.axes).get, f.value))
       }
       val axisCols = q.axes.map(a => overSlice(a, cq.axes).get.as(a))
-      if (q.valuesInSlice.isEmpty) {
-        val counted = filtered.groupBy(axisCols: _*)
-          .agg(sum(col("__m_n")).as("count"))
-        return Some(finish(counted.select((q.axes :+ "count").map(col): _*), q))
-      }
-      // quotient measures (Avg/StdDev/RatioSum) cannot merge their
-      // finished values — they re-aggregate through the slice's hidden
-      // companion columns and the quotient is rebuilt after the merge
-      // (never avg-of-avgs), same machinery as append/delete maintenance
-      val quotient = q.valuesInSlice.filter(v =>
-        finishedFromCompanions(v, cubedef.measure(v).agg).isDefined)
-      val comps = if (quotient.isEmpty) Seq.empty else companionCols(quotient)
-      val aggs = q.valuesInSlice.map { v =>
-        (cubedef.measure(v).agg match {
-          case Agg.Count => sum(col(v)) // counts add up
-          // merging cached flags is any-true, NOT the base-expression
-          // size test (the cached column is already boolean)
-          case Agg.UnionIncludedEmpty => max(col(v))
-          // quotient placeholders: rebuilt from merged companions below
-          case Agg.Avg | Agg.StdDev | Agg.Ratio(_, _) => first(col(v))
-          case other                  => other.compile(col(v))
-        }).as(v)
-      } ++ comps.map(cn => sum(col(cn)).as(cn))
-      val merged0 = filtered.groupBy(axisCols: _*).agg(aggs.head, aggs.tail: _*)
-      val merged = quotient.foldLeft(merged0) { (acc, v) =>
-        acc.withColumn(v, finishedFromCompanions(v, cubedef.measure(v).agg).get)
-      }
-      return Some(finish(merged.select((q.axes ++ q.values).map(col): _*), q))
+      // a values-less query (the reference's default row count) re-sums
+      // the cached per-group __m_n support, never a visible "count": a
+      // value-carrying slice may hold a user measure merely NAMED count
+      val (ms, out) =
+        if (q.valuesInSlice.isEmpty) (Nil, q.axes.map(col) :+ col("__m_n").as("count"))
+        else (specs(q.valuesInSlice), (q.axes ++ q.values).map(col))
+      return Some(finish(Agg.merge(filtered, axisCols, ms).select(out: _*), q))
     }
 
     None

@@ -67,8 +67,8 @@ final class Navigator(val cubedef: CubeDef, val query: CubeQuery) {
 
   /** Drill: filter on a value of the first axis and drop that axis —
     * the click-through the reference optimizes with DrillOnFirstAxis
-    * (bacon/cutting.py:274); with Spark the finer slice can simply be
-    * persisted and re-aggregated (Slicer.Reagg).
+    * (bacon/cutting.py:274); a CuttingBoard serves it by re-aggregating
+    * the cached finer slice.
     */
   def drill(value: Any): Navigator = {
     require(query.axes.nonEmpty, "cannot drill a 0-dimensional query")

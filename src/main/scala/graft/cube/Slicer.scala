@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * parquet scan by Catalyst) → `groupBy`/`rollup`/`cube`/`pivot` (one
   * shuffle, map-side partial aggregation) → `orderBy`/`limit`. The
   * reference's slice cache + reuse strategies (bacon/cutting.py:205-522)
-  * map onto Catalyst plan reuse and `persist()`ed finer-grained slices
-  * re-aggregated with `Reagg.from` below.
+  * live in [[CuttingBoard]], which re-aggregates its persisted
+  * finer-grained slices by the accumulators' merge rules ([[Agg.merge]]).
   */
 object Slicer {
 
@@ -150,25 +150,5 @@ object Slicer {
     // stable tiebreak on the row axes that exist in the output
     val ties = q.rowAxes.filter(df.columns.contains).map(col(_).asc_nulls_first)
     df.orderBy(cols ++ ties: _*)
-  }
-
-  /** Re-aggregate a finer slice into a coarser one — the Spark form of the
-    * reference's ManipulateSlice reuse strategy (bacon/cutting.py:336):
-    * a persisted slice grouped on a superset of axes can answer any query
-    * on a subset of them without touching the base data, provided every
-    * measure is re-aggregatable (sum/min/max/count are; avg/stddev need
-    * their decomposed parts).
-    */
-  object Reagg {
-    def from(finer: DataFrame, coarserAxes: Seq[String], measures: Seq[(String, Agg)]): DataFrame = {
-      val aggs = measures.map { case (name, agg) =>
-        val rolled = agg match {
-          case Agg.Count => sum(col(name)) // counts add up
-          case other     => other.compile(col(name))
-        }
-        rolled.as(name)
-      }
-      finer.groupBy(coarserAxes.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
   }
 }

@@ -531,7 +531,9 @@ object Dedup {
     * becomes exact instead of sample-approximate).
     */
   private[graft] def collectIfAtMost(df: DataFrame, threshold: Long): Option[Array[Row]] = {
-    val lim = math.min(threshold + 1L, Int.MaxValue.toLong).toInt
+    require(threshold >= 0, s"collectIfAtMost: threshold must be >= 0, got $threshold")
+    // threshold + 1 capped at Int.MaxValue without overflowing the Long
+    val lim = math.min(threshold, Int.MaxValue - 1L).toInt + 1
     val rows = df.limit(lim).collect()
     if (rows.length <= threshold) Some(rows) else None
   }

@@ -14,24 +14,21 @@ import graft.cube.Agg
   */
 object Skew {
 
-  /** Salted two-phase aggregation. `aggs` maps output column name to the
-    * re-aggregatable Agg (Sum/Min/Max/Count — algebraic ones).
+  /** Salted two-phase aggregation. `aggs` are (output name, measure
+    * expression, Agg); every Agg must have a merge rule
+    * ([[Agg.mergeable]]: Sum/Count/Min/Max/Union and the quotients
+    * Avg/StdDev/Ratio) — any other is refused. Phase 1 emits each
+    * directly mergeable partial plus the companions a quotient needs
+    * ([[Agg.companions]]); phase 2 is [[Agg.merge]].
     */
   def saltedAgg(df: DataFrame, keys: Seq[String], salts: Int,
                 aggs: Seq[(String, Column, Agg)]): DataFrame = {
     val salted = df.withColumn("__salt__", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
+    val partials = aggs.collect { case (n, c, a) if a.remerge.isDefined => a.compile(c).as(n) } ++
+      Agg.companions(aggs).map { case (n, c) => c.as(n) }
     val phase1 = salted
       .groupBy((keys.map(col) :+ col("__salt__")): _*)
-      .agg(aggs.head match { case (n, c, a) => a.compile(c).as(n) },
-        aggs.tail.map { case (n, c, a) => a.compile(c).as(n) }: _*)
-    val phase2Aggs = aggs.map { case (n, _, a) =>
-      val merged = a match {
-        case Agg.Count => sum(col(n)) // partial counts add
-        case other     => other.compile(col(n))
-      }
-      merged.as(n)
-    }
-    phase1.groupBy(keys.map(col): _*)
-      .agg(phase2Aggs.head, phase2Aggs.tail: _*)
+      .agg(partials.head, partials.tail: _*)
+    Agg.merge(phase1, keys.map(col), aggs).select((keys ++ aggs.map(_._1)).map(col): _*)
   }
 }

@@ -73,7 +73,8 @@ object Bpe {
     * Two execution regimes behind one contract (the broadcast-join
     * discipline applied to an iterative loop): the corpus scan is
     * always distributed, then if the word-frequency table is small
-    * enough to collect (`localVocabThreshold`, approx-counted without a
+    * enough to collect (`localVocabThreshold`, decided exactly by one
+    * bounded collect, `Dedup.collectIfAtMost`, with no
     * full pass) the merge loop runs driver-side over the collected
     * counts — 40 merges are 40 in-memory passes over a Map instead of
     * 80 Spark jobs. A 100 TB web corpus with a hapax-heavy vocab

@@ -1995,8 +1995,8 @@ object CorpusOps {
     val reserved = Set("__tk", "__ln", "__pg", "__sym", "__n", "__tc",
       "__alpha", "__stop", "__nl", "__bullet", "__ellip", "__lf", "__pf") ++
       (2 to 10).map(n => s"__g$n")
-    require(carry.forall(c => !reserved(c)),
-      s"carried column collides with a gopher-internal name: $carry")
+    require(!reserved(idCol) && carry.forall(c => !reserved(c)),
+      s"id or carried column collides with a gopher-internal name: $idCol, $carry")
     val cs = carry.map(col)
     val t = coalesce(col(textCol), lit(""))
     val staged = df.select(col(idCol) +: cs ++: Seq(
@@ -2091,8 +2091,10 @@ object CorpusOps {
     * upstream plan is evaluated ONCE, with no join and no exchange.
     * (The previous shape semi-joined `df` against its own kept ids,
     * which re-evaluated the whole upstream on both join sides and paid
-    * an id-keyed shuffle; for the unique-id frames this operator
-    * filters, the row set is identical.) The keep boolean compares the
+    * an id-keyed shuffle.) The contract is per ROW: each row is judged
+    * on its own text, so rows sharing an id are kept or dropped
+    * independently (the semi-join kept every row of a passing id). The
+    * keep boolean compares the
     * same 6dp-rounded expressions [[gopherSignals]] emits, so
     * filter-vs-signals agreement is by construction.
     */

@@ -203,8 +203,9 @@ object Unigram {
   }
 
   /** Learn a unigram-LM vocabulary from the corpus. Word-frequency
-    * table ≤ `localVocabThreshold` (approx-counted) → the serial loop
-    * over collected counts; larger → the distributed loop: per EM
+    * table ≤ `localVocabThreshold` (exact, by one bounded collect —
+    * `Dedup.collectIfAtMost`) → the serial loop over collected
+    * counts; larger → the distributed loop: per EM
     * iteration ONE pass over the word table (forward–backward in a
     * UDF, piece log-probs in its closure — tokenizer-sized) plus one
     * piece-grain aggregation, with M-step and pruning driver-side on

@@ -127,6 +127,38 @@ class CuttingBoardSpec extends SparkSpec {
     board.slice(CubeQuery().addAxis("k").addValue("grp")).collect()
     assert(board.stats == (2L, 3L), "group coarsening must NOT be served from cache")
     board.clear()
+
+    // the mergeability table, one Agg kind at a time: a coarser query over
+    // a mergeable measure is served from the finer slice and equals a
+    // fresh recompute; the rest fall through to the base scan
+    val wide = df
+      .withColumn("tags", when(col("v") > 4, array().cast("array<string>"))
+        .otherwise(array(col("s"))))
+      .withColumn("cur", when(col("v") === 8.0, "eur").otherwise("usd"))
+    val kinds: Seq[(Agg, org.apache.spark.sql.Column, Boolean)] = Seq(
+      (Agg.Sum, col("v"), true), (Agg.Count, lit(1), true),
+      (Agg.Min, col("v"), true), (Agg.Max, col("v"), true),
+      (Agg.Avg, col("v"), true), (Agg.StdDev, col("v"), true),
+      (Agg.Ratio(col("v"), col("d")), lit(1), true),
+      (Agg.UnionSet, col("tags"), true), (Agg.UnionIncludedEmpty, col("tags"), true),
+      (Agg.GroupConsistent, col("d"), false), (Agg.CountDistinct, col("d"), false),
+      (Agg.ApproxDistinct(), col("d"), false),
+      (Agg.Labeled(col("cur"), Agg.Sum), col("v"), false))
+    kinds.foreach { case (agg, e, mergeable) =>
+      assert(agg.mergeable == mergeable, s"$agg")
+      val kCube = CubeDef(labels = Seq(Label("k"), Label("s")),
+        measures = Seq(Measure("m", e, agg)))
+      val kBoard = new CuttingBoard(wide, kCube)
+      val kFine = CubeQuery().addAxis("k").addAxis("s").addValue("m")
+      kBoard.slice(kFine).collect()
+      val kCoarse = CubeQuery().addAxis("k").addValue("m")
+      val kGot = kBoard.slice(kCoarse).collect().map(r => r.getString(0) -> r.get(1)).toMap
+      assert(kBoard.lastServedFrom == (if (mergeable) Some(kFine) else None), s"$agg")
+      val kWant = Slicer.slice(wide, kCube, kCoarse).collect()
+        .map(r => r.getString(0) -> r.get(1)).toMap
+      assert(kGot == kWant, s"$agg")
+      kBoard.clear()
+    }
   }
 
   test("invisible quotient value rides strategy-2: accumulated in the merge, hidden from the output") {

@@ -124,14 +124,6 @@ class SlicerSpec extends SparkSpec {
     assert(out.length == 1 && out(0).getString(0) == "B")
   }
 
-  test("reagg of finer slice equals direct coarse slice") {
-    val fine = Slicer.slice(df, cube, CubeQuery().addAxis("k").addAxis("s")
-      .addValue("sum_v").addValue("n"))
-    val re = Slicer.Reagg.from(fine, Seq("k"), Seq("sum_v" -> Agg.Sum, "n" -> Agg.Count))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(re("A") == (3.0, 2L) && re("B") == (12.0, 3L))
-  }
-
   test("URL-parsed relative date filter slices correctly (typed codec path)") {
     val d2 = Seq(("2026-02-03", 1.0), ("2026-02-20", 2.0), ("2026-03-05", 4.0))
       .toDF("dt", "v").withColumn("dt", to_date($"dt"))

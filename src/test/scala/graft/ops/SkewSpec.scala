@@ -53,6 +53,30 @@ class SkewSpec extends SparkSpec {
     }
   }
 
+  test("salted quotients (Avg/StdDev/Ratio) equal direct aggregation") {
+    val df = Seq.tabulate(1000)(i =>
+      (if (i % 10 == 0) "cold" else "hot", (i % 7).toDouble, (i % 3).toDouble))
+      .toDF("k", "v", "d")
+    def byKey(f: org.apache.spark.sql.DataFrame) = f.collect()
+      .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    val direct = byKey(df.groupBy("k").agg(
+      (sum("v") / count(lit(1))).as("avg"), stddev_samp("v").as("sd"),
+      (sum("v") / sum("d")).as("ratio")))
+    val salted = byKey(Skew.saltedAgg(df, Seq("k"), salts = 8,
+      Seq(("avg", col("v"), Agg.Avg), ("sd", col("v"), Agg.StdDev),
+        ("ratio", lit(1), Agg.Ratio(col("v"), col("d"))))))
+    assert(salted.keySet == direct.keySet)
+    for (k <- direct.keySet; (a, b) <- salted(k).zip(direct(k)))
+      assert(math.abs(a - b) <= 1e-9 * math.abs(b), s"$k: $a vs $b")
+  }
+
+  test("an Agg with no merge rule is refused") {
+    val df = Seq(("a", 1.0), ("a", 2.0)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException](Skew.saltedAgg(df, Seq("k"), salts = 4,
+      Seq(("s", col("v"), Agg.Sum), ("nd", col("v"), Agg.CountDistinct))))
+    assert(e.getMessage.contains("nd"))
+  }
+
   test("salted min/max merge correctly") {
     val df = Seq(("a", 5.0), ("a", 1.0), ("a", 9.0), ("b", 2.0)).toDF("k", "v")
     val out = Skew.saltedAgg(df, Seq("k"), salts = 4,

@@ -152,6 +152,28 @@ class GopherSpec extends SparkSpec {
     assert(f(nul, "top_2gram_char_frac") == 1.0) // NUL-bearing 2-gram x2: 2*4/8
   }
 
+  test("a reserved gopher-internal name is refused as the id column") {
+    val docs = Seq((1L, "some text")).toDF("__tk", "text")
+    val e = intercept[IllegalArgumentException](
+      CorpusOps.gopherSignals(docs, "__tk", "text"))
+    assert(e.getMessage.contains("__tk"))
+    intercept[IllegalArgumentException](CorpusOps.gopherFilter(docs, "__tk", "text"))
+  }
+
+  test("gopherFilter judges each row on its own text, also when ids repeat") {
+    val stops = Seq("the", "of", "and", "that", "with", "have")
+    val good = (0 until 30).map(i => s"${stops(i % 6)} filler$i").mkString(" ")
+    val bad = Seq.fill(5)(
+      "the quick brown fox jumps over lazy dogs with great energy and")
+      .mkString(" ")
+    // id 7 carries one passing and one failing row, id 8 two passing
+    val docs = Seq((7L, good, "a"), (7L, bad, "b"), (8L, good, "c"), (8L, good, "d"))
+      .toDF("doc_id", "text", "tag")
+    val kept = CorpusOps.gopherFilter(docs, "doc_id", "text")
+      .select("doc_id", "tag").as[(Long, String)].collect().toSet
+    assert(kept == Set((7L, "a"), (8L, "c"), (8L, "d")))
+  }
+
   test("partitioning invariance: signals identical at 1 and 7 partitions") {
     val docs = (0L until 40L).map { i =>
       (i, s"the w$i of x${i % 7} and y${i % 3} that z$i\nline $i...\n- b $i")
