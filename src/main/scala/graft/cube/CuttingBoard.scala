@@ -3,6 +3,7 @@ package graft.cube
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.ops.Relational
 
 /** The reference's CuttingBoard (bacon/cutting.py:21): a dataset + cubedef
   * with a slice cache and reuse strategies.
@@ -28,12 +29,25 @@ import org.apache.spark.storage.StorageLevel
   * bounded cached form merges them), exactly as a correct
   * materialized-view rewriter must.
   *
+  * Serving form: a cached slice of at most [[CuttingBoard.LocalRows]]
+  * rows is held on the driver, as a LocalRelation over its collected
+  * rows, and that frame IS the cache entry — there is no second copy, so
+  * every path that replaces or drops an entry (maintenance, eviction,
+  * refresh, clear) replaces or drops the rows with it. An exact hit
+  * folds into the LocalRelation at plan time and collects with no Spark
+  * job; a reuse hit re-aggregates it through [[Agg.merge]] in one
+  * single-task job with no shuffle. A larger slice stays a persisted
+  * frame (`storageLevel`). A board dropped without [[clear]] leaves
+  * nothing persisted behind for its driver-held slices.
+  *
   * Persistence: with `warehouseDir` set, every cached slice is ALSO
   * written as a parquet table named by a fingerprint of its query (plus a
   * tiny manifest holding the query's URL string, row count and creation
   * stamp). A later board over the same warehouse reloads those tables, so
   * materializations survive the driver — the real 100 TB materialized-
-  * view story, where in-memory persist() dies with the session.
+  * view story, where in-memory state dies with the session. The served
+  * frame is built from the table just written (or reloaded): driver-held
+  * when under the bound, else the persisted table read.
   *
   * Staleness: `maxAgeMillis` mirrors the reference's TTL'd dataset cache
   * (bacon/utils/cache.py:1-127 re-checks a callable dataset per slice):
@@ -47,9 +61,11 @@ import org.apache.spark.storage.StorageLevel
   * `maxWarehouseBytes` bound that: after every materializing write the
   * least-recently-SERVED tables (manifest mtime, touched on each reuse
   * hit) are deleted until both budgets hold. Tables backing a slice
-  * still in the in-memory cache are never deleted — the persisted frame
-  * re-reads those files on block eviction — they count toward the
-  * budget but only cold tables are evictable.
+  * still in the in-memory cache are never deleted — an over-bound
+  * slice's persisted frame re-reads those files on block eviction (a
+  * driver-held slice reads nothing back, but its table stays reloadable
+  * for a future board) — they count toward the budget but only cold
+  * tables are evictable.
   *
   * Warehouse concurrency: READERS are always safe — tables land
   * temp-then-swap and manifests rename atomically, so a second board's
@@ -76,7 +92,8 @@ final class CuttingBoard(
     maxWarehouseSlices: Int = Int.MaxValue,
     maxWarehouseBytes: Long = Long.MaxValue,
 ) {
-  /** A cached slice: its query, the persisted frame, its exact row count
+  /** A cached slice: its query, the frame it is served from (driver-held
+    * or persisted, see [[hold]]), its exact row count
     * (known because slices are materialized eagerly on insert) and its
     * column width — rows × width is the cost input for cheapest-slice
     * selection (proportional to the cells a re-aggregation reads),
@@ -131,7 +148,6 @@ final class CuttingBoard(
       try {
         val lines = java.nio.file.Files.readAllLines(mf.toPath)
         val url = lines.get(0)
-        val rows = lines.get(1).toLong
         val created = lines.get(2).toLong
         val pq = new java.io.File(dir, mf.getName.stripSuffix(".manifest"))
         if (maxAgeMillis.forall(a => clock() - created <= a) && pq.exists()) {
@@ -146,7 +162,7 @@ final class CuttingBoard(
           // than cached as a frame the append/delete paths cannot
           // maintain
           if (Agg.companions(specs(q.valuesInSlice)).forall(c => reread.columns.contains(c._1))) {
-            val df = reread.persist(storageLevel)
+            val (df, rows) = hold(reread)
             cache = cache :+ Cached(q, df, rows)
           }
         }
@@ -418,20 +434,24 @@ final class CuttingBoard(
     Agg.companions(specs(vals)).map { case (n, c) => c.as(n) }
 
   /** Materialize a computed slice: warehouse write + read-back when a
-    * warehouse exists (the bytes survive the driver), plain persist
-    * otherwise. Returns the frame to cache and its exact row count.
+    * warehouse exists (the bytes survive the driver), then [[hold]] the
+    * result — driver-held under [[CuttingBoard.LocalRows]] rows,
+    * persisted above. Returns the frame to cache and its exact row count.
     *
     * The write lands in a temp directory first and is swapped into the
-    * final `slice_<fp>` name only when complete. `append` merges a slice
-    * FROM its own persisted table (c.df reads slice_<fp>): a direct
-    * mode("overwrite") there would delete the very files the merge plan
-    * re-reads if any persisted block got evicted mid-write — failing the
-    * job or, worse, committing a slice computed from half-deleted input.
-    * Temp-then-swap means the plan's source files stay intact until the
-    * new table is fully written (same pattern as writeManifest and
-    * Sources.compact). A crash between delete and move leaves a manifest
-    * pointing at a missing table — reload's `pq.exists()` check skips it
-    * and the slice recomputes, which is sound.
+    * final `slice_<fp>` name only when complete. An over-bound slice's
+    * `append` merges FROM its own persisted table (c.df reads
+    * slice_<fp>): a direct mode("overwrite") there would delete the very
+    * files the merge plan re-reads if any persisted block got evicted
+    * mid-write — failing the job or, worse, committing a slice computed
+    * from half-deleted input. Temp-then-swap means the plan's source
+    * files stay intact until the new table is fully written (same
+    * pattern as writeManifest and Sources.compact). A driver-held slice
+    * merges from its LocalRelation and reads no file, so for it the swap
+    * only keeps readers of the warehouse from seeing a torn table. A
+    * crash between delete and move leaves a manifest pointing at a
+    * missing table — reload's `pq.exists()` check skips it and the slice
+    * recomputes, which is sound.
     */
   private def materialize(q: CubeQuery, computed: DataFrame): (DataFrame, Long) =
     warehouseDir match {
@@ -443,17 +463,32 @@ final class CuttingBoard(
         computed.write.mode("overwrite").parquet(tmp.getAbsolutePath)
         deleteRecursively(dst)
         java.nio.file.Files.move(tmp.toPath, dst.toPath)
-        val reread = computed.sparkSession.read
-          .parquet(dst.getAbsolutePath).persist(storageLevel)
-        val n = reread.count()
+        val (held, n) = hold(computed.sparkSession.read.parquet(dst.getAbsolutePath))
         writeManifest(dir, fp, s"${UrlQueryBuilder.toUrlString(q, cubedef)}\n$n\n${clock()}\n")
         touchManifest(fp) // GC recency from the injectable clock, not FS time
-        (reread, n)
+        (held, n)
       }
-      case None =>
-        val p = computed.persist(storageLevel)
-        (p, p.count())
+      case None => hold(computed)
     }
+
+  /** The frame a slice is served from, and its exact row count. A slice
+    * of at most [[CuttingBoard.LocalRows]] rows is collected and held on
+    * the driver as a LocalRelation: exact hits fold into it at plan time
+    * (ConvertToLocalRelation) and collect with no Spark job, and reuse
+    * hits re-aggregate it in one single-task job with no shuffle. A
+    * larger slice stays a persisted frame. The frame is persisted before
+    * the bounded collect, so an over-bound slice computes once: the
+    * collect stops at the bound and the count fills the rest.
+    */
+  private def hold(stored: DataFrame): (DataFrame, Long) = {
+    val p = stored.persist(storageLevel)
+    Relational.collectIfAtMost(p.coalesce(1), CuttingBoard.LocalRows) match {
+      case Some(rows) =>
+        p.unpersist()
+        (Relational.localTable(p.sparkSession, rows, p.schema), rows.length.toLong)
+      case None => (p, p.count())
+    }
+  }
 
   /** Mark a slice's materialization as freshly used (GC recency). Uses
     * the injectable clock so specs can order evictions deterministically.
@@ -467,8 +502,10 @@ final class CuttingBoard(
     * `maxWarehouseSlices` or the total table+manifest bytes exceed
     * `maxWarehouseBytes`, delete the least-recently-served COLD
     * materialization (manifest mtime order; fingerprints in the
-    * in-memory cache are pinned — their persisted frames lazily re-read
-    * the table files). Runs WITHOUT the board lock (only the shared
+    * in-memory cache are pinned — an over-bound slice's persisted frame
+    * lazily re-reads the table files; a driver-held slice needs no file
+    * to serve, and its pin only keeps the table reloadable while the
+    * slice is live). Runs WITHOUT the board lock (only the shared
     * per-warehouse write lock), so the caller's pin snapshot can go
     * stale: a concurrent miss on this board may materialize AND cache a
     * new slice between the snapshot and this GC. Two defenses close
@@ -720,13 +757,16 @@ final class CuttingBoard(
     if (finerIdx.nonEmpty) {
       val best = finerIdx.minBy(i => (cache(i).cost, i))
       promote(best)
-      val Cached(cq, df, _) = cache.head
+      val Cached(cq, df, rows) = cache.head
       lastServedFrom = Some(cq)
       val extraFilters = q.filters.toSet -- cq.filters.toSet
+      // a driver-held slice is one partition: the merge below plans
+      // without an Exchange and runs as one single-task job
+      val source = if (rows <= CuttingBoard.LocalRows) df.coalesce(1) else df
       // Extra filters evaluate against the slice's axis columns (already
       // computed values) or their hierarchy-derived truncations, never
       // the base expressions.
-      val filtered = extraFilters.foldLeft(df) { (acc, f) =>
+      val filtered = extraFilters.foldLeft(source) { (acc, f) =>
         acc.where(FilterOp.compile(f.op, overSlice(f.name, cq.axes).get, f.value))
       }
       val axisCols = q.axes.map(a => overSlice(a, cq.axes).get.as(a))
@@ -764,6 +804,11 @@ final class CuttingBoard(
 }
 
 object CuttingBoard {
+  /** Slices of at most this many rows are held on the driver
+    * (CuttingBoard.hold); larger ones stay persisted frames.
+    */
+  private[cube] val LocalRows = 100000L
+
   /** JVM-wide per-warehouse write locks (canonical path → monitor):
     * every filesystem MUTATION of a warehouse — slice-table
     * temp-then-swap, manifest write, eviction delete, purge, GC —

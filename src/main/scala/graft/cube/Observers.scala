@@ -28,9 +28,17 @@ object Observers {
     (header +: rows).mkString("\n")
   }
 
-  /** JSON rows (the shape of the reference's json observer payload). */
-  def toJsonRows(slice: DataFrame): String =
-    "[" + slice.toJSON.collect().mkString(",") + "]"
+  /** JSON rows (the shape of the reference's json observer payload).
+    * Rendered as a projection (`to_json(struct(...))`, the same bytes as
+    * `toJSON`) rather than `toJSON`, a MapPartitions that always runs a
+    * job: over a driver-held slice the projection folds at plan time and
+    * collects with no job.
+    */
+  def toJsonRows(slice: DataFrame): String = {
+    val fields = slice.columns.map(c => col("`" + c.replace("`", "``") + "`"))
+    slice.select(to_json(struct(fields: _*))).collect()
+      .map(_.getString(0)).mkString("[", ",", "]")
+  }
 
   /** A rendered 2-D pivot table with row and column totals — the
     * reference's Table2D observer (bacon/observers/tables.py).

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions._
 
@@ -516,26 +516,6 @@ object Dedup {
       if (sampled == 0) math.max(ones.count(), 1L)
       else (sampled / f).toLong
     }
-  }
-
-  /** One-pass bounded "is this frame driver-sized?" probe: collect up
-    * to `threshold + 1` rows and return Some(rows) — the COMPLETE
-    * result — when the frame holds ≤ threshold rows, None otherwise.
-    * Replaces the approxRowCount-then-collect pair the tokenizer
-    * trainers used on their vocab AGGREGATES: an aggregate carries no
-    * optimizer row count, so the estimate fell to the sample-count
-    * branch and ran the whole tokenize+explode+agg pipeline once for
-    * the count and again for the collect. CollectLimit executes the
-    * aggregation once and ships at most threshold+1 rows to the driver
-    * regardless of the frame's true size (the path decision also
-    * becomes exact instead of sample-approximate).
-    */
-  private[graft] def collectIfAtMost(df: DataFrame, threshold: Long): Option[Array[Row]] = {
-    require(threshold >= 0, s"collectIfAtMost: threshold must be >= 0, got $threshold")
-    // threshold + 1 capped at Int.MaxValue without overflowing the Long
-    val lim = math.min(threshold, Int.MaxValue - 1L).toInt + 1
-    val rows = df.limit(lim).collect()
-    if (rows.length <= threshold) Some(rows) else None
   }
 
   /** Web-scale entry point for n-gram Jaccard near-dup: identical

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Relational building blocks the reference reaches via its Django/SQL
   * backends (bacon/sql.py, bacon/django/sql.py) — star joins, top-k
@@ -37,6 +38,36 @@ object Relational {
       .where(col("__rank__") <= k)
       .drop("__rank__")
   }
+
+  /** One-pass bounded "is this frame driver-sized?" probe: collect up
+    * to `threshold + 1` rows and return Some(rows) — the COMPLETE
+    * result — when the frame holds ≤ threshold rows, None otherwise.
+    * Replaces the approxRowCount-then-collect pair the tokenizer
+    * trainers used on their vocab AGGREGATES: an aggregate carries no
+    * optimizer row count, so the estimate fell to the sample-count
+    * branch and ran the whole tokenize+explode+agg pipeline once for
+    * the count and again for the collect. CollectLimit executes the
+    * aggregation once and ships at most threshold+1 rows to the driver
+    * regardless of the frame's true size (the path decision also
+    * becomes exact instead of sample-approximate).
+    */
+  private[graft] def collectIfAtMost(df: DataFrame, threshold: Long): Option[Array[Row]] = {
+    require(threshold >= 0, s"collectIfAtMost: threshold must be >= 0, got $threshold")
+    // threshold + 1 capped at Int.MaxValue without overflowing the Long
+    val lim = math.min(threshold, Int.MaxValue - 1L).toInt + 1
+    val rows = df.limit(lim).collect()
+    if (rows.length <= threshold) Some(rows) else None
+  }
+
+  /** A driver-held LocalRelation over collected rows. Projections,
+    * filters and limits over it fold at plan time
+    * (ConvertToLocalRelation) and collect with no Spark job, and a
+    * broadcast exchange over its LocalTableScan builds on the driver,
+    * also job-free.
+    */
+  private[graft] def localTable(spark: SparkSession, rows: Array[Row],
+                                schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** HAVING — filter on an aggregated measure after a slice. */
   def having(slice: DataFrame, predicate: Column): DataFrame = slice.where(predicate)

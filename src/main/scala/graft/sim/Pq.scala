@@ -75,7 +75,7 @@ object Pq {
       org.apache.spark.sql.types.StructField("cv", sub.schema("subv").dataType)))
     val initRows = trainV.select(col("id"), col("v"))
       .orderBy(col("id")).limit(k).collect()
-    var books = Similarity.localTable(spark,
+    var books = graft.ops.Relational.localTable(spark,
       (for {
         s <- 0 until m
         (r, i) <- initRows.zipWithIndex // collect() of orderBy+limit is id-ordered
@@ -97,7 +97,7 @@ object Pq {
           .select(split(col("grp"), ":").getItem(0).cast("int").as("sub"),
             split(col("grp"), ":").getItem(1).cast("int").as("code"),
             transform(col("centroid"), x => x.cast("float")).as("cv"))
-        books = Similarity.localTable(spark, refit.collect(), bookSchema)
+        books = graft.ops.Relational.localTable(spark, refit.collect(), bookSchema)
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevP)
     books

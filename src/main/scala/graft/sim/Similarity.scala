@@ -191,18 +191,6 @@ object Similarity {
       .select(col("id"), col("__best.cid").as("cid"),
         col("__best.v").as("v"), col("__best.nrm").as("nrm"))
 
-  /** A driver-held LocalRelation copy of collected rows. Broadcast
-    * exchanges over a LocalTableScan build driver-side WITHOUT a Spark
-    * job, so iterative loops whose per-round state is structure-sized
-    * (centroid/codebook tables — "always driver-collectable" by
-    * declaration) re-enter the next round's plan job-free where a
-    * checkpointed frame paid a broadcast-build job per consumer.
-    */
-  private[sim] def localTable(spark: SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
   private[sim] def rankCentroids(v: DataFrame, cents: DataFrame, n: Int): DataFrame = {
     // codegen'd float dot product + precomputed norms on both sides —
     // no interpreted array-cast HOFs in this per-(vector × centroid) path
@@ -327,7 +315,7 @@ object Similarity {
         col("v").as("cv"), col("nrm").as("cnrm"))
     val centSchema = initDf.schema
     val spark = v.sparkSession
-    var cents = localTable(spark, initDf.collect(), centSchema)
+    var cents = graft.ops.Relational.localTable(spark, initDf.collect(), centSchema)
     // Shuffle-partition scope for the bounded loop (the star-contraction
     // loop's explicit-sizing precedent, Dedup.scala): the train frame is
     // ≤ trainCap rows by construction, so the refit aggregations need
@@ -346,7 +334,7 @@ object Similarity {
           .select(col("grp").as("cid"),
             transform(col("centroid"), x => x.cast("float")).as("cv"))
           .withColumn("cnrm", norm(col("cv")))
-        cents = localTable(spark, refit.collect(), centSchema)
+        cents = graft.ops.Relational.localTable(spark, refit.collect(), centSchema)
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevP)
     cents

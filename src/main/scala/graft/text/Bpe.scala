@@ -74,7 +74,7 @@ object Bpe {
     * discipline applied to an iterative loop): the corpus scan is
     * always distributed, then if the word-frequency table is small
     * enough to collect (`localVocabThreshold`, decided exactly by one
-    * bounded collect, `Dedup.collectIfAtMost`, with no
+    * bounded collect, `Relational.collectIfAtMost`, with no
     * full pass) the merge loop runs driver-side over the collected
     * counts — 40 merges are 40 in-memory passes over a Map instead of
     * 80 Spark jobs. A 100 TB web corpus with a hapax-heavy vocab
@@ -91,7 +91,7 @@ object Bpe {
     val counts = df
       .select(explode(TextFunctions.wsTokens(lower(trim(col(textCol))))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("word_count"))
-    graft.dedup.Dedup.collectIfAtMost(counts, localVocabThreshold) match {
+    graft.ops.Relational.collectIfAtMost(counts, localVocabThreshold) match {
       case Some(rows) =>
         val wc = rows.map(r => r.getString(0) -> r.getLong(1))
         serialMerges(wc, numMerges, minPairCount)

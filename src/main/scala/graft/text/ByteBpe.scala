@@ -109,7 +109,7 @@ object ByteBpe {
     import spark.implicits._
     val counts = df.select(explode(preTokUdf(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("word_count"))
-    graft.dedup.Dedup.collectIfAtMost(counts, localVocabThreshold) match {
+    graft.ops.Relational.collectIfAtMost(counts, localVocabThreshold) match {
       case Some(rows) =>
         val wc = rows.map(r => r.getString(0) -> r.getLong(1))
         Bpe.serialMergeLoop(wc.toSeq.map { case (w, c) => toSymbols(w) -> c },

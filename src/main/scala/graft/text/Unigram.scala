@@ -204,7 +204,7 @@ object Unigram {
 
   /** Learn a unigram-LM vocabulary from the corpus. Word-frequency
     * table ≤ `localVocabThreshold` (exact, by one bounded collect —
-    * `Dedup.collectIfAtMost`) → the serial loop over collected
+    * `Relational.collectIfAtMost`) → the serial loop over collected
     * counts; larger → the distributed loop: per EM
     * iteration ONE pass over the word table (forward–backward in a
     * UDF, piece log-probs in its closure — tokenizer-sized) plus one
@@ -224,7 +224,7 @@ object Unigram {
     val counts = df
       .select(explode(TextFunctions.wsTokens(lower(trim(col(textCol))))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("word_count"))
-    val local = graft.dedup.Dedup.collectIfAtMost(counts, localVocabThreshold)
+    val local = graft.ops.Relational.collectIfAtMost(counts, localVocabThreshold)
     if (local.isDefined) {
       val wc = local.get.map(r => r.getString(0) -> r.getLong(1)).toSeq
       return serialTrain(wc, vocabSize, maxPieceLen, seedSize, shrink, emIters)

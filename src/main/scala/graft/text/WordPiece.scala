@@ -87,7 +87,7 @@ object WordPiece {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
     import spark.implicits._
-    val local = graft.dedup.Dedup.collectIfAtMost(counts, localVocabThreshold)
+    val local = graft.ops.Relational.collectIfAtMost(counts, localVocabThreshold)
     if (local.isDefined) {
       val wc = local.get.map(r => r.getString(0) -> r.getLong(1))
       return serialTrain(wc, numMerges, minPairCount)

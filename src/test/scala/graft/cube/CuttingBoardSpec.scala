@@ -1004,4 +1004,70 @@ class CuttingBoardSpec extends SparkSpec {
     assert(b3.stats == (1L, 0L), "fresh board must reload a complete table")
     b1.clear(); b2.clear(); b3.clear()
   }
+
+  test("a driver-held slice serves exact hits as a LocalRelation and reuse hits without an Exchange") {
+    val board = freshBoard()
+    val fine = CubeQuery().addAxis("k").addAxis("s").addValue("sum_v").addValue("avg_v")
+    board.slice(fine).collect()
+    val exact = board.slice(fine.removeValue("avg_v"))
+    assert(exact.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      exact.queryExecution.optimizedPlan.treeString)
+    val coarse = CubeQuery().addAxis("k").addValue("sum_v").addValue("avg_v")
+    val reused = board.slice(coarse)
+    val got = reused.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(board.stats == (2L, 1L) && board.lastServedFrom.contains(fine))
+    val executed = reused.queryExecution.executedPlan.toString
+    assert(!executed.contains("Exchange"), executed)
+    val want = Slicer.slice(board.dataset, board.cubedef, coarse).collect()
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(got == want)
+    board.clear()
+  }
+
+  test("a slice over the driver-held bound stays a persisted frame and serves Slicer.slice's rows") {
+    val n = CuttingBoard.LocalRows + 1
+    val df = spark.range(n).withColumn("v", col("id") % 7)
+    val cube = CubeDef(
+      labels = Seq(Label("id"), Label("g", col("id") % 3)),
+      measures = Seq(Measure("sum_v", col("v"), Agg.Sum)))
+    val board = new CuttingBoard(df, cube)
+    val q = CubeQuery().addAxis("id").addAxis("g").addValue("sum_v")
+    board.slice(q).collect()
+    val served = board.slice(q)
+    assert(served.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.isDefined, served.queryExecution.optimizedPlan.treeString)
+    def rows(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq).toSet
+    assert(rows(served) == rows(Slicer.slice(df, cube, q)))
+    val coarse = CubeQuery().addAxis("g").addValue("sum_v")
+    assert(rows(board.slice(coarse)) == rows(Slicer.slice(df, cube, coarse)))
+    assert(board.stats == (2L, 1L))
+    board.clear()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a board dropped without clear() leaves Spark's cache manager empty") {
+    spark.sharedState.cacheManager.clearCache()
+    val dir = java.nio.file.Files.createTempDirectory("graft-wh-drop").toString
+    val df = Seq(("A", "x", 2020, 1.0), ("B", "y", 2021, 8.0)).toDF("k", "s", "y", "v")
+    val cube = CubeDef(
+      labels = Seq(Label("k"), Label("s"), Label("y")),
+      measures = Seq(Measure("sum_v", col("v"), Agg.Sum), Measure("avg_v", col("v"), Agg.Avg)))
+    val q = CubeQuery().addAxis("k").addAxis("s").addValue("sum_v").addValue("avg_v")
+    Seq(new CuttingBoard(df, cube), new CuttingBoard(df, cube, warehouseDir = Some(dir)))
+      .foreach { board =>
+        board.slice(q).collect()
+        board.slice(CubeQuery().addAxis("k").addValue("avg_v")).collect()
+        board.append(Seq(("C", "x", 2022, 2.0)).toDF("k", "s", "y", "v"))
+        board.delete(Seq(("A", "x", 2020, 1.0)).toDF("k", "s", "y", "v"))
+        assert(asMap(board.slice(q).select("k", "s", "sum_v")) ==
+          Map("B,y" -> 8.0, "C,x" -> 2.0))
+      }
+    // a fresh board reloading the warehouse holds its slices the same way
+    val reloaded = new CuttingBoard(df, cube, warehouseDir = Some(dir))
+    assert(reloaded.slice(q).collect().length == 2 && reloaded.stats == (1L, 0L))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "every slice here fits the driver-held bound: nothing may stay persisted")
+  }
 }

@@ -30,6 +30,22 @@ class ObserversSpec extends SparkSpec {
     assert(json.startsWith("[") && json.contains("\"sum_v\""))
   }
 
+  test("json rows render the same bytes as toJSON: nulls, timestamp, date, array, decimal, dotted name") {
+    val typed = spark.sql(
+      """SELECT * FROM VALUES
+        |  ('a', TIMESTAMP'2024-02-29 13:45:01.123456', DATE'2024-02-29',
+        |   array(1, NULL, 3), CAST(12.345 AS DECIMAL(10, 3)), 1.5D),
+        |  ('b"q', TIMESTAMP'1969-12-31 23:59:59', DATE'1900-01-01',
+        |   array(), CAST(-0.5 AS DECIMAL(10, 3)), CAST('NaN' AS DOUBLE)),
+        |  (NULL, NULL, NULL, NULL, NULL, NULL)
+        |  AS t(k, ts, d, xs, dec, v)""".stripMargin)
+      .withColumnRenamed("v", "v.w")
+    val local = spark.createDataFrame(java.util.Arrays.asList(typed.collect(): _*), typed.schema)
+    Seq(typed, local, typed.where(col("k").isNotNull)).foreach { f =>
+      assert(Observers.toJsonRows(f) == "[" + f.toJSON.collect().mkString(",") + "]")
+    }
+  }
+
   test("pivot table computes cells, row/col totals and grand total in one pass") {
     val t = Observers.pivotTable(df, cube, "k", "s", "sum_v")
     assert(t.colKeys == Vector("x", "y"))

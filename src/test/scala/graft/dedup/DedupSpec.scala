@@ -324,14 +324,6 @@ class DedupSpec extends SparkSpec {
     assert(viaEstimate.contains((1L, 3L)))
   }
 
-  test("collectIfAtMost: an unbounded threshold returns every row, not an overflowed empty limit") {
-    val all = Dedup.collectIfAtMost(docs, Long.MaxValue)
-    assert(all.map(_.map(_.getLong(0)).toSet).contains(Set(1L, 2L, 3L, 4L, 5L)))
-    assert(Dedup.collectIfAtMost(docs, 5L).map(_.length).contains(5))
-    assert(Dedup.collectIfAtMost(docs, 4L).isEmpty)
-    intercept[IllegalArgumentException](Dedup.collectIfAtMost(docs, -1L))
-  }
-
   test("scale entry point applies the stop-shingle cut by default") {
     val atScale = Dedup.ngramJaccardPairsAtScale(docs, "doc_id", "text",
       k = 3, threshold = 0.3)

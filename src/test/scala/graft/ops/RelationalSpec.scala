@@ -12,6 +12,15 @@ class RelationalSpec extends SparkSpec {
   private lazy val bigDim = (0 until 10).map(i => (i, s"order$i")).toDF("o_ok", "o_name")
   private lazy val smallDim = (0 until 3).map(i => (i, s"nation$i")).toDF("n_nk", "n_name")
 
+  test("collectIfAtMost: an unbounded threshold returns every row, not an overflowed empty limit") {
+    val docs = (1L to 5L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val all = Relational.collectIfAtMost(docs, Long.MaxValue)
+    assert(all.map(_.map(_.getLong(0)).toSet).contains(Set(1L, 2L, 3L, 4L, 5L)))
+    assert(Relational.collectIfAtMost(docs, 5L).map(_.length).contains(5))
+    assert(Relational.collectIfAtMost(docs, 4L).isEmpty)
+    intercept[IllegalArgumentException](Relational.collectIfAtMost(docs, -1L))
+  }
+
   test("starJoin result is the plain multi-join result") {
     val got = Relational.starJoin(fact, Seq(
       bigDim -> (col("ok") === col("o_ok")),
