@@ -14,6 +14,86 @@ import org.apache.spark.sql.SparkSession
   * the real work.
   */
 object Bench {
+  /** Canonical text of a printed plan: expression ids (#123), plan ids,
+    * temp paths, closure identities and dir-derived table names churn
+    * run-to-run, so they are stripped. [[planHash]] hashes this text and
+    * [[PlanDump]] writes it, so two commits' dumps diff cleanly: a diff
+    * that survives is a plan change (a lost broadcast, a new exchange)
+    * that wall-clock noise can hide.
+    */
+  def canonicalPlan(plan: String): String =
+    plan
+      .replaceAll("#\\d+[L]?", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("/tmp/[^\\s,)\\]]+", "/tmp/_")
+      .replaceAll("file:[^\\s,)\\]]+", "file:_")
+      // mapPartitions/Invoke nodes print their closure's JVM identity —
+      // a Lambda class counter + hashCode that churns run-to-run even at
+      // the same commit. Strip both so plan diffs mean plan changes.
+      .replaceAll("\\$\\$Lambda[$/][\\w./]+", Matcher.quoteReplacement("$$Lambda"))
+      .replaceAll("@[0-9a-fA-F]{1,16}\\b", "@")
+      // IvfIndex registers its bucketed postings table under a name
+      // derived from the index directory; e03 builds into a fresh temp
+      // dir per run, so the name (not the plan shape) would churn.
+      .replaceAll("graft_ivf_postings_[0-9a-f]+", "graft_ivf_postings_")
+      // same churn for the MinHash index's dir-derived table names
+      // (d20 builds into a fresh temp dir per run)
+      .replaceAll("graft_mh_(bands|shingles)_[0-9a-f]+", "graft_mh_$1_")
+      // and the PQ index's (e10 fresh temp dir per run; e11 per-JVM)
+      .replaceAll("graft_pq_codes_[0-9a-f]+", "graft_pq_codes_")
+      // higher-order-function lambda variables are numbered by a
+      // session-global counter (x_17), so ADDING a query shifts the
+      // names in every later lambda-using plan — canonicalize so
+      // cross-round diffs mean plan changes, not query-list changes
+      .replaceAll("\\b(x|y)_\\d+", "$1_")
+
+  /** Stable fingerprint of a frame's physical plan: the first 6 bytes
+    * (12 hex digits) of the MD5 of its [[canonicalPlan]].
+    */
+  def planHash(df: org.apache.spark.sql.DataFrame): String = {
+    val canon = canonicalPlan(df.queryExecution.executedPlan.toString)
+    val d = java.security.MessageDigest.getInstance("MD5").digest(canon.getBytes("UTF-8"))
+    d.take(6).map(b => f"$b%02x").mkString
+  }
+
+  /** Pin the global expression-id counter to a per-query-name base
+    * (1e9 + hash(name)·1e3 — far above anything a warm session has
+    * allocated) before constructing the frame that is hashed or dumped.
+    *
+    * Why: plans with several distinct aggregates (q38's profile) order
+    * their Expand/gid rewrite by iterating a hash structure keyed on
+    * GLOBAL expression ids, so the id OFFSET a query's plan happens to
+    * start at — a function of every allocation before it, including
+    * per-JVM store builds that only run on a cold JVM — can reorder an
+    * untouched query's plan STRING (same plan, shuffled projection
+    * list). [[canonicalPlan]] cannot normalize an order change, so the
+    * q38 hash flaked between same-code sweeps. Pinning makes every
+    * hashed plan's ids — and therefore any id-keyed iteration order — a
+    * pure function of (code, query), independent of sweep composition
+    * and JVM history. Safe because ids only need uniqueness WITHIN a
+    * plan (the counter runs monotonically from the pinned base during
+    * one construction; a plan allocating past another query's base is
+    * harmless, ids only collide across plans that never meet) and
+    * nothing in graft holds live frames across gate invocations (the
+    * per-JVM stores cache PATHS, never plans); Spark's own cross-plan
+    * machinery (CacheManager lookups) compares canonicalized plans,
+    * which are id-insensitive by construction.
+    */
+  def pinExprIds(name: String): Unit =
+    try {
+      val f = Class
+        .forName("org.apache.spark.sql.catalyst.expressions.NamedExpression$")
+        .getDeclaredField("curId")
+      f.setAccessible(true)
+      val base = 1_000_000_000L +
+        (scala.util.hashing.MurmurHash3.stringHash(name).toLong & 0xFFFFFL) * 1_000L
+      f.get(null).asInstanceOf[java.util.concurrent.atomic.AtomicLong].set(base)
+    } catch {
+      // a Spark upgrade renaming the field degrades to the old
+      // (unpinned, occasionally order-flaky) hashes, never a failure
+      case _: ReflectiveOperationException => ()
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -41,79 +121,6 @@ object Bench {
     SparkEntry.queries.get("q01_agg_basic").foreach { fn =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
-    }
-    // Stable fingerprint of a physical plan: expression ids (#123), plan
-    // ids and temp paths churn run-to-run, so they are stripped before
-    // hashing. Diffing these across rounds catches plan regressions (a
-    // lost broadcast, a new exchange) that wall-clock noise can hide.
-    //
-    // Id-sensitivity fix (round-15 verdict, What's wrong #1): plans with
-    // several distinct aggregates (q38's profile) order their Expand/gid
-    // rewrite by iterating a hash structure keyed on GLOBAL expression
-    // ids, so the id OFFSET a query's plan happens to start at — a
-    // function of every allocation before it, including per-JVM store
-    // builds that only run on a cold JVM — can reorder an untouched
-    // query's plan STRING (same plan, shuffled projection list). The
-    // stripping regexes cannot normalize an order change, so the q38
-    // hash flaked between same-code sweeps. Fixed at the root by
-    // [[pinExprIds]]: before constructing each query's rep-0 frame (the
-    // one that is hashed) the global expression-id counter is set to a
-    // value derived from the QUERY NAME alone, making every hashed
-    // plan's ids — and therefore any id-keyed iteration order — a pure
-    // function of (code, query), independent of sweep composition and
-    // JVM history. Safe because ids only need uniqueness WITHIN a plan
-    // (the counter runs monotonically from the pinned base during one
-    // construction) and nothing in graft holds live frames across gate
-    // invocations (the per-JVM stores cache PATHS, never plans);
-    // Spark's own cross-plan machinery (CacheManager lookups) compares
-    // canonicalized plans, which are id-insensitive by construction.
-    // Pin the global expression-id counter to a per-query-name base
-    // (1e9 + hash(name)·1e3 — far above anything a warm session has
-    // allocated, 1000-wide... the GAP between bases is irrelevant:
-    // a plan allocating past another query's base is harmless, ids
-    // only collide across plans that never meet). See the planHash
-    // comment for why this exists and why it is safe.
-    def pinExprIds(name: String): Unit =
-      try {
-        val f = Class
-          .forName("org.apache.spark.sql.catalyst.expressions.NamedExpression$")
-          .getDeclaredField("curId")
-        f.setAccessible(true)
-        val base = 1_000_000_000L +
-          (scala.util.hashing.MurmurHash3.stringHash(name).toLong & 0xFFFFFL) * 1_000L
-        f.get(null).asInstanceOf[java.util.concurrent.atomic.AtomicLong].set(base)
-      } catch {
-        // a Spark upgrade renaming the field degrades to the old
-        // (unpinned, occasionally order-flaky) hashes, never a failure
-        case _: ReflectiveOperationException => ()
-      }
-    def planHash(df: org.apache.spark.sql.DataFrame): String = {
-      val canon = df.queryExecution.executedPlan.toString
-        .replaceAll("#\\d+[L]?", "#")
-        .replaceAll("plan_id=\\d+", "plan_id=")
-        .replaceAll("/tmp/[^\\s,)\\]]+", "/tmp/_")
-        .replaceAll("file:[^\\s,)\\]]+", "file:_")
-        // mapPartitions/Invoke nodes print their closure's JVM identity —
-        // a Lambda class counter + hashCode that churns run-to-run even at
-        // the same commit. Strip both so plan diffs mean plan changes.
-        .replaceAll("\\$\\$Lambda[$/][\\w./]+", Matcher.quoteReplacement("$$Lambda"))
-        .replaceAll("@[0-9a-fA-F]{1,16}\\b", "@")
-        // IvfIndex registers its bucketed postings table under a name
-        // derived from the index directory; e03 builds into a fresh temp
-        // dir per run, so the name (not the plan shape) would churn.
-        .replaceAll("graft_ivf_postings_[0-9a-f]+", "graft_ivf_postings_")
-        // same churn for the MinHash index's dir-derived table names
-        // (d20 builds into a fresh temp dir per run)
-        .replaceAll("graft_mh_(bands|shingles)_[0-9a-f]+", "graft_mh_$1_")
-        // and the PQ index's (e10 fresh temp dir per run; e11 per-JVM)
-        .replaceAll("graft_pq_codes_[0-9a-f]+", "graft_pq_codes_")
-        // higher-order-function lambda variables are numbered by a
-        // session-global counter (x_17), so ADDING a query shifts the
-        // names in every later lambda-using plan — canonicalize so
-        // cross-round diffs mean plan changes, not query-list changes
-        .replaceAll("\\b(x|y)_\\d+", "$1_")
-      val d = java.security.MessageDigest.getInstance("MD5").digest(canon.getBytes("UTF-8"))
-      d.take(6).map(b => f"$b%02x").mkString
     }
     // Exact baselines exist to validate the scale paths, not to headline
     // the bench: d06 is the O(n²) ANN recall baseline (SimilaritySpec's

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions._
 
@@ -1082,9 +1083,9 @@ object Dedup {
     * side — the pipeline choice when train docs are long and
     * contamination is local, vs [[decontaminate]] which drops whole
     * docs. Overlapping contaminated spans merge into disjoint islands
-    * exactly like [[stripDuplicatedSpans]], and the rebuild is the same
-    * O(L+S) [[excideSpans]] cursor fold — linear in the doc's own
-    * length however much of it is contaminated.
+    * and the text is rebuilt by the same [[excise]] core as
+    * [[stripDuplicatedSpans]] — an O(L+S) cursor fold, linear in the
+    * doc's own length however much of it is contaminated.
     *
     * Untouched documents keep their text byte-identical; excised
     * documents rebuild from their surviving tokens (original case,
@@ -1102,34 +1103,15 @@ object Dedup {
   def exciseContaminatedSpans(train: DataFrame, evalSet: DataFrame,
                               idCol: String, textCol: String,
                               k: Int = 13, margin: Int = 0): DataFrame = {
-    require(k >= 2, s"window size must be >= 2 tokens, got $k")
     require(margin >= 0, s"margin must be >= 0, got $margin")
     val evalH = windowHashes(evalSet, idCol, textCol, k).select(col("h")).distinct()
-    val removedStarts = windowHashes(train, idCol, textCol, k)
+    val covered = windowHashes(train, idCol, textCol, k)
       .join(evalH, Seq("h"), "left_semi")
-      .select(col("id"), col("pos"))
-    // islands-merge the margin-widened windows into disjoint spans and
-    // rebuild via the O(L+S) cursor fold — the stripDuplicatedSpans
-    // shape; the per-token `array_contains(removed, i+1)` rebuild this
-    // replaces was O(L·|removed|) (a fully-contaminated 1M-token doc
-    // degenerated to ~10¹² comparisons in one task)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("tp"))
-    val removedSpans = removedStarts
       .select(col("id"), explode(sequence(
         greatest(col("pos") - margin, lit(1)),
         col("pos") + (k - 1) + margin)).as("tp"))
-      .distinct() // overlapping windows share positions; islands need one row each
-      .withColumn("__island", col("tp") - row_number().over(w))
-      .groupBy(col("id"), col("__island"))
-      .agg(min(col("tp")).cast("int").as("s"), max(col("tp")).cast("int").as("e"))
-      .groupBy("id").agg(collect_list(struct(col("s"), col("e"))).as("__spans"))
-      .withColumnRenamed("id", "__rm_id")
-    val cleaned = when(col("__spans").isNull, col(textCol))
-      .otherwise(excideSpans(col(textCol), col("__spans")))
-    train.join(removedSpans, col(idCol) === col("__rm_id"), "left")
-      .select(train.columns.map(c =>
-        if (c == textCol) cleaned.as(textCol) else col(c)): _*)
+      .distinct() // overlapping windows share positions; runs need one row each
+    excise(train, idCol, textCol, covered).select(train.columns.map(col): _*)
   }
 
   /** Position-stamped hashes of every k-token window of every document —
@@ -1141,6 +1123,7 @@ object Dedup {
     */
   private def windowHashes(df: DataFrame, idCol: String, textCol: String,
                            k: Int): DataFrame = {
+    require(k >= 2, s"window size must be >= 2 tokens, got $k")
     // native codegen'd window hashing (graft.functions.WindowHashes64),
     // bit-identical to the interpreted HOF form
     // transform(sequence(1, n−k+1), i => xxhash64(array_join(slice(tk, i, k), " ")))
@@ -1155,35 +1138,54 @@ object Dedup {
       .select(col("id"), (col("pos") + 1).as("pos"), col("col").as("h"))
   }
 
+  /** Stamp every window-hash row with per-hash aggregates: each
+    * `(name, agg)` becomes column `name` = `agg` over all rows sharing
+    * its hash `h`. The key-count stamp of every window operator, and
+    * the only place that knows its shape.
+    *
+    * A count window over h, not a per-hash aggregation joined back
+    * (r17 optimization round): the join-back form re-ran the
+    * scan+tokenize+hash map stage once per consumer for identical
+    * rows, while the window rides the one shuffle the aggregation used
+    * (the window gates are oracle-hash-checked, which pinned the values
+    * across that change). Known cost: WindowExec does no partial
+    * aggregation, so every row of a hot hash lands in one task — the
+    * reason the CorpusOps line operators keep aggregate + join-back.
+    */
+  private def byHash(sh: DataFrame, stamps: (String, Column)*): DataFrame = {
+    val w = Window.partitionBy(col("h"))
+    stamps.foldLeft(sh) { case (d, (name, agg)) => d.withColumn(name, agg.over(w)) }
+  }
+
+  /** Per-document aggregates over each document's k-token windows,
+    * every window row carrying its corpus frequency `__c` ([[byHash]]).
+    * Returns `id` plus `aggs` for EVERY input row — an id with no
+    * windows (fewer than k tokens, or a NULL text) gets NULL aggregates,
+    * which the caller coalesces to its own default.
+    *
+    * Input contract: `idCol` must be unique. Rows that share an id are
+    * treated as one document: their windows pool into one aggregate row,
+    * returned once per input row.
+    */
+  private def perDocWindows(df: DataFrame, idCol: String, textCol: String, k: Int)(
+      aggs: Column*): DataFrame = {
+    val perDoc = byHash(windowHashes(df, idCol, textCol, k), "__c" -> count(lit(1)))
+      .groupBy("id").agg(aggs.head, aggs.tail: _*)
+    df.select(col(idCol).as("id")).join(perDoc, Seq("id"), "left")
+  }
+
   /** Per-document window counts: total k-token windows and how many are
     * duplicated (their hash occurs at any other position corpus-wide).
     * The standard diagnostic before substring-level removal. One shuffle
-    * to count per-hash occurrences, a semi-join back, one per-doc agg.
+    * stamps per-hash counts, one per-doc agg, one join back to every id.
     */
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 20): DataFrame = {
-    require(k >= 2, s"window size must be >= 2 tokens, got $k")
-    // ONE pass over the inverted index (r17 optimization round): the
-    // previous three-consumer form (per-hash dup set, semi-join back,
-    // per-doc totals) re-ran the scan+tokenize+hash map stage once per
-    // consumer — 3× the map work for identical output. A count window
-    // over h stamps each occurrence with its corpus frequency in the
-    // same shuffle the per-hash aggregation used, and ONE per-doc
-    // aggregation derives both counts. Identical values (the gate is
-    // oracle-hash-checked).
-    val sh = windowHashes(df, idCol, textCol, k)
-    val perDoc = sh
-      .withColumn("__c", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_shingles"),
+                   k: Int = 20): DataFrame =
+    perDocWindows(df, idCol, textCol, k)(count(lit(1)).as("n_shingles"),
         sum(when(col("__c") > 1, 1L).otherwise(0L)).as("n_dup_shingles"))
-    df.select(col(idCol).as("id"))
-      .join(perDoc, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_dup_shingles"), lit(0L)).as("n_dup_shingles"))
-  }
 
   /** Remove duplicated k-token spans, keeping canonical occurrences —
     * the corpus-level substring dedup pass. The canonical occurrence of
@@ -1196,6 +1198,8 @@ object Dedup {
     * copy of a shared run). Documents without duplicated spans keep
     * their text byte-identical; cleaned documents are rebuilt from
     * their surviving tokens (original case, single-space joined).
+    * This is [[exactSubstrDedup]] at `minTokens = k` without its two
+    * count columns: both are one [[excise]] over [[excisedTokens]].
     *
     * Scale shape: canonical selection is min(struct(id,pos)) per hash —
     * an aggregation, never a collect_list (a window repeated millions of
@@ -1203,20 +1207,53 @@ object Dedup {
     * document's own token count.
     */
   def stripDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = 20): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("tp"))
-    val removedSpans = excisedTokens(df, idCol, textCol, k)
-      .withColumn("__island", col("tp") - row_number().over(w))
+                           k: Int = 20): DataFrame =
+    excise(df, idCol, textCol, excisedTokens(df, idCol, textCol, k))
+      .select(df.columns.map(col): _*)
+
+  /** Maximal runs of consecutive token positions per document (gaps and
+    * islands: within one id, `tp − row_number()` is constant along a
+    * run). Takes DISTINCT (id, tp) rows — a repeated position would
+    * split its run — and returns (id, s, e, __n): the run's 1-based
+    * inclusive bounds and its token count. The window partitions by doc
+    * id, so a partition is bounded by the document's own token count.
+    * (Aggregate names print in the physical plan, so renaming `__n`
+    * would change exactSubstrDedup's Bench plan hash.)
+    */
+  private def runs(covered: DataFrame): DataFrame =
+    covered
+      .withColumn("__island", col("tp") - row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("tp"))))
       .groupBy(col("id"), col("__island"))
-      .agg(min(col("tp")).cast("int").as("s"), max(col("tp")).cast("int").as("e"))
-      .groupBy("id").agg(collect_list(struct(col("s"), col("e"))).as("__spans"))
+      .agg(min(col("tp")).as("s"), max(col("tp")).as("e"), count(lit(1)).as("__n"))
+
+  /** Excise covered token positions from each document's text: merge
+    * `covered` (DISTINCT (id, tp) rows, 1-based token positions) into
+    * maximal [[runs]], collect them per doc and rebuild the text with
+    * the O(L+S) [[excideSpans]] fold. Returns `df`'s columns, with
+    * `textCol` rebuilt, plus `__n_spans` / `__n_removed` — the run
+    * count and removed-token count, NULL for a doc with no covered
+    * position, whose text round-trips byte-identical. Callers select
+    * what they report; column pruning drops unused counts from the plan.
+    *
+    * Input contract: `idCol` must be unique. Rows that share an id are
+    * treated as one document: their covered positions pool, and the
+    * pooled spans cut every row of that id. A NULL text passes through
+    * unchanged (it has no tokens, so nothing covers it).
+    */
+  private def excise(df: DataFrame, idCol: String, textCol: String,
+                     covered: DataFrame): DataFrame = {
+    val spans = runs(covered)
+      .groupBy(col("id"))
+      .agg(collect_list(struct(col("s"), col("e"))).as("__spans"),
+        count(lit(1)).as("__n_spans"),
+        sum(col("__n")).as("__n_removed"))
       .withColumnRenamed("id", "__rm_id")
     val cleaned = when(col("__spans").isNull, col(textCol))
       .otherwise(excideSpans(col(textCol), col("__spans")))
-    df.join(removedSpans, col(idCol) === col("__rm_id"), "left")
-      .select(df.columns.map(c =>
-        if (c == textCol) cleaned.as(textCol) else col(c)): _*)
+    df.join(spans, col(idCol) === col("__rm_id"), "left")
+      .select(df.columns.map(c => if (c == textCol) cleaned.as(textCol) else col(c)) ++
+        Seq(col("__n_spans"), col("__n_removed")): _*)
   }
 
   /** Rebuild text after excising token spans, in ONE cursor fold over
@@ -1278,51 +1315,27 @@ object Dedup {
     * token count).
     */
   def exactSubstrSpans(df: DataFrame, idCol: String, textCol: String,
-                       minTokens: Int = 50): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("tp"))
-    excisedTokens(df, idCol, textCol, minTokens)
-      .withColumn("__island", col("tp") - row_number().over(w))
-      .groupBy(col("id"), col("__island"))
-      .agg(min(col("tp")).cast("long").as("span_start"),
-        max(col("tp")).cast("long").as("span_end"),
-        count(lit(1)).as("span_tokens"))
-      .select(col("id"), col("span_start"), col("span_end"), col("span_tokens"))
-  }
+                       minTokens: Int = 50): DataFrame =
+    runs(excisedTokens(df, idCol, textCol, minTokens))
+      .select(col("id"), col("s").cast("long").as("span_start"),
+        col("e").cast("long").as("span_end"), col("__n").as("span_tokens"))
 
   /** ExactSubstr excision (Lee et al. 2021 — see [[exactSubstrSpans]]):
     * every maximal duplicated run of ≥ `minTokens` tokens is removed
     * wherever no canonical window occurrence protects it, the text
     * rebuilt from the surviving tokens (original case, single-space
-    * joined — a fully
-    * duplicated doc comes back as the empty string, not dropped).
-    * Adds `n_spans` / `n_removed` (0 for untouched docs, whose text
-    * round-trips byte-identical). Differs from [[stripDuplicatedSpans]]
-    * only in the reported span accounting and the Lee-scale default
-    * threshold; the removal rule is the same proven-equivalent union.
+    * joined — a fully duplicated doc comes back as the empty string,
+    * not dropped). Adds `n_spans` / `n_removed` (0 for untouched docs,
+    * whose text round-trips byte-identical). [[stripDuplicatedSpans]]
+    * is this operator without the two counts (and with a shorter
+    * default window): both are one [[excise]] over [[excisedTokens]].
     */
   def exactSubstrDedup(df: DataFrame, idCol: String, textCol: String,
-                       minTokens: Int = 50): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("tp"))
-    val marks = excisedTokens(df, idCol, textCol, minTokens)
-      .withColumn("__island", col("tp") - row_number().over(w))
-      .groupBy(col("id"), col("__island"))
-      .agg(min(col("tp")).cast("int").as("s"), max(col("tp")).cast("int").as("e"),
-        count(lit(1)).as("__n"))
-      .groupBy(col("id"))
-      .agg(collect_list(struct(col("s"), col("e"))).as("__spans"),
-        count(lit(1)).as("__n_spans"),
-        sum(col("__n")).as("__n_removed"))
-      .withColumnRenamed("id", "__rm_id")
-    val cleaned = when(col("__spans").isNull, col(textCol))
-      .otherwise(excideSpans(col(textCol), col("__spans")))
-    df.join(marks, col(idCol) === col("__rm_id"), "left")
-      .select(df.columns.map(c =>
-        if (c == textCol) cleaned.as(textCol) else col(c)) ++ Seq(
+                       minTokens: Int = 50): DataFrame =
+    excise(df, idCol, textCol, excisedTokens(df, idCol, textCol, minTokens))
+      .select(df.columns.map(col) ++ Seq(
         coalesce(col("__n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("__n_removed"), lit(0L)).as("n_removed")): _*)
-  }
 
   /** Soft dedup — per-document REWEIGHTING instead of removal (He et
     * al. 2024, "SoftDedup: an Efficient Data Reweighting Method for
@@ -1346,29 +1359,17 @@ object Dedup {
     * weight 6dp-rounded so the arithmetic replays engine-exactly.
     *
     * Scale shape: the same (id, pos, 8-byte hash) inverted index as
-    * every window operator — one map-side-combinable per-hash count
-    * (Zipf-bounded), one equi-join back, one per-doc mean. No text
-    * ever shuffles; reweighting 100 TB is two shuffles.
+    * every window operator — one per-hash count stamp ([[byHash]]), one
+    * per-doc mean, one equi-join back to every id. No text ever
+    * shuffles; reweighting 100 TB is two shuffles.
     */
   def softDedupWeights(df: DataFrame, idCol: String, textCol: String,
-                       k: Int = 13): DataFrame = {
-    require(k >= 2, s"window size must be >= 2 tokens, got $k")
-    // one map pass + count window over h instead of per-hash agg +
-    // join-back (which re-ran the scan+tokenize+hash map stage twice) —
-    // see dupSpanStats; identical values, oracle-hash-checked gate
-    val sh = windowHashes(df, idCol, textCol, k)
-    val perDoc = sh
-      .withColumn("__c", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_windows"),
+                       k: Int = 13): DataFrame =
+    perDocWindows(df, idCol, textCol, k)(count(lit(1)).as("n_windows"),
         avg(log(col("__c").cast("double"))).as("__mlc"))
-    df.select(col(idCol).as("id"))
-      .join(perDoc, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(round(exp(-col("__mlc")), 6), lit(1.0)).as("weight"))
-  }
 
   /** Distinct (id, tp) token positions covered by a duplicated
     * `minTokens`-window whose canonical (min (id, pos)) occurrence is
@@ -1383,16 +1384,9 @@ object Dedup {
     */
   private def excisedTokens(df: DataFrame, idCol: String, textCol: String,
                             minTokens: Int): DataFrame = {
-    require(minTokens >= 2, s"window size must be >= 2 tokens, got $minTokens")
-    // one map pass + min/count windows over h instead of per-hash agg +
-    // join-back (which re-ran the scan+tokenize+hash map stage twice) —
-    // the canonical occurrence and the dup filter ride the same shuffle
-    // the aggregation used; identical rows (d47/d33 oracle-hash-checked)
-    val sh = windowHashes(df, idCol, textCol, minTokens)
-    val wH = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val occ = sh
-      .withColumn("__n", count(lit(1)).over(wH))
-      .withColumn("__canon", min(struct(col("id"), col("pos"))).over(wH))
+    // the canonical occurrence and the dup filter ride one byHash stamp
+    val occ = byHash(windowHashes(df, idCol, textCol, minTokens),
+        "__n" -> count(lit(1)), "__canon" -> min(struct(col("id"), col("pos"))))
       .where(col("__n") > 1)
       .select(col("id"), col("pos"),
         col("__canon.id").as("cid"), col("__canon.pos").as("cpos"))

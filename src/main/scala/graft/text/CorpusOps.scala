@@ -834,11 +834,7 @@ object CorpusOps {
     */
   def dedupParagraphs(df: DataFrame, idCol: String, textCol: String,
                       minChars: Int = 5): DataFrame = {
-    require(minChars >= 1, s"minChars must be >= 1, got $minChars")
-    val lines = df.select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
-      .withColumn("__key",
-        when(length(trim(col("__line"))) >= minChars, lower(trim(col("__line")))))
+    val lines = explodeLines(df, idCol, textCol, minChars, lower)
     // First-occurrence stamp via aggregate + join-back, NOT a window
     // over the line key. The r17 single-pass window form (min over a
     // Window.partitionBy(__key)) was measured 1.46x faster at sf0.1 and
@@ -855,16 +851,7 @@ object CorpusOps {
     val marked = lines.join(first, Seq("__key"), "left")
       .withColumn("__keep", col("__key").isNull ||
         (col("__first.__id") === col("__id") && col("__first.__pos") === col("__pos")))
-    marked.groupBy(col("__id"))
-      .agg(
-        concat_ws("\n", transform(
-          array_sort(collect_list(when(col("__keep"),
-            struct(col("__pos"), col("__line"))))),
-          s => s.getField("__line"))).as("clean_text"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(!col("__keep"), 1L).otherwise(0L)).as("n_removed"))
-      .select(col("__id").as(idCol), col("clean_text"), col("n_kept"),
-        col("n_removed"))
+    reassemble(marked, col("__keep"), idCol)
   }
 
   /** Corpus-level boilerplate line removal (the RefinedWeb/CCNet line
@@ -894,11 +881,7 @@ object CorpusOps {
   def removeBoilerplateLines(df: DataFrame, idCol: String, textCol: String,
                              minDocs: Int, minChars: Int = 1): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    require(minChars >= 1, s"minChars must be >= 1, got $minChars")
-    val lines = df.select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
-      .withColumn("__key",
-        when(length(trim(col("__line"))) >= minChars, trim(col("__line"))))
+    val lines = explodeLines(df, idCol, textCol, minChars, identity)
     // Document frequency via distinct+aggregate+join-back, NOT a
     // window over the line key. The r17 single-pass window form
     // (size(collect_set(__id)) over Window.partitionBy(__key)) was
@@ -917,17 +900,47 @@ object CorpusOps {
       .select(col("__key").as("__bp"))
     val marked = lines.join(common, col("__key") === col("__bp"), "left")
       .withColumn("__drop", col("__bp").isNotNull)
+    reassemble(marked, !col("__drop"), idCol)
+  }
+
+  /** The line rows of every document, shared by the line-grain dedup
+    * operators: (`__id`, `__pos` 0-based, `__line`, `__key`), where
+    * `__key` is `norm(trim(line))` for a line of at least `minChars`
+    * trimmed chars and NULL for a shorter one (structure, never a dedup
+    * key). `norm` is `lower` for case-folded matching, identity for
+    * exact matching.
+    *
+    * Input contract: `idCol` must be unique. Rows that share an id are
+    * treated as one document — their lines pool in [[reassemble]]. A
+    * NULL text yields no line row (`posexplode` skips null), so its
+    * document is absent from the line operators' output.
+    */
+  private def explodeLines(df: DataFrame, idCol: String, textCol: String,
+                           minChars: Int, norm: Column => Column): DataFrame = {
+    require(minChars >= 1, s"minChars must be >= 1, got $minChars")
+    df.select(col(idCol).as("__id"),
+        posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
+      .withColumn("__key",
+        when(length(trim(col("__line"))) >= minChars, norm(trim(col("__line")))))
+  }
+
+  /** Per-document reassembly of [[explodeLines]] rows: the lines where
+    * `keep` holds, rejoined with "\n" in position order, plus the kept
+    * and removed line counts. Returns (idCol, clean_text, n_kept,
+    * n_removed), one row per document with at least one line; a document
+    * whose every line is removed comes back as "" with n_kept = 0, not
+    * dropped. The collect_list is bounded by the document's own line
+    * count.
+    */
+  private def reassemble(marked: DataFrame, keep: Column, idCol: String): DataFrame =
     marked.groupBy(col("__id"))
       .agg(
         concat_ws("\n", transform(
-          array_sort(collect_list(when(!col("__drop"),
-            struct(col("__pos"), col("__line"))))),
+          array_sort(collect_list(when(keep, struct(col("__pos"), col("__line"))))),
           s => s.getField("__line"))).as("clean_text"),
-        sum(when(!col("__drop"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("__drop"), 1L).otherwise(0L)).as("n_removed"))
-      .select(col("__id").as(idCol), col("clean_text"), col("n_kept"),
-        col("n_removed"))
-  }
+        sum(when(keep, 1L).otherwise(0L)).as("n_kept"),
+        sum(when(!keep, 1L).otherwise(0L)).as("n_removed"))
+      .select(col("__id").as(idCol), col("clean_text"), col("n_kept"), col("n_removed"))
 
   /** Unigram language model trained on a reference corpus: one row per
     * token with its raw count — the model half of CCNet-style perplexity

@@ -412,6 +412,18 @@ class DedupSpec extends SparkSpec {
     assert(cleaned(25L) == ("zz qq25", 1L, 5L))
     assert(cleaned(26L) == ("", 1L, 6L)) // empty string, not dropped/NULL
     assert(cleaned(27L) == ("gap27", 2L, 11L))
+
+    // stripDuplicatedSpans is exactSubstrDedup without the counts: same
+    // text for every doc at k = minTokens, and the input's columns come
+    // back unchanged — including a passthrough column named like one of
+    // exactSubstrDedup's count columns
+    val tagged = corpus.withColumn("n_spans", concat(lit("src-"), col("doc_id")))
+    val stripped = Dedup.stripDuplicatedSpans(tagged, "doc_id", "text", k = 5)
+    assert(stripped.columns.toSeq == tagged.columns.toSeq, stripped.columns.mkString(","))
+    val strippedRows = stripped.collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(strippedRows == cleaned.map { case (id, (text, _, _)) => id -> (text, s"src-$id") },
+      strippedRows.toString)
   }
 
   test("ExactSubstr: overlapping windows with canonicals in different docs keep canonical copies intact") {

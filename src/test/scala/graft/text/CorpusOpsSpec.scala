@@ -457,6 +457,7 @@ class CorpusOpsSpec extends SparkSpec {
       (2L, "HEADER\nunique two"),
       (3L, "no header here\nunique three"),
       (4L, "  HEADER  \nunique four"),      // trim-matched
+      (5L, "HEADER\n HEADER"),              // every line removed
     ).toDF("id", "text")
     val out = CorpusOps.removeBoilerplateLines(docs, "id", "text", minDocs = 2)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3))))
@@ -467,6 +468,8 @@ class CorpusOpsSpec extends SparkSpec {
     assert(out(2L) == (("unique two", 1L, 1L)))
     assert(out(3L) == (("no header here\nunique three", 2L, 0L)))
     assert(out(4L) == (("unique four", 1L, 1L)))
+    // a document whose every line is boilerplate comes back empty, not dropped
+    assert(out(5L) == (("", 0L, 2L)), out(5L).toString)
 
     // raising minChars above the key length exempts it from the rule
     val kept = CorpusOps.removeBoilerplateLines(docs, "id", "text",
@@ -630,7 +633,8 @@ class CorpusOpsSpec extends SparkSpec {
     val docs = Seq(
       (1L, "dup line x\nunique a\nab"),
       (2L, "unique b\n Dup Line X \ndup line x\nab"),
-      (3L, "same line here\nsame line here")).toDF("id", "text")
+      (3L, "same line here\nsame line here"),
+      (4L, "Same Line Here\ndup line x")).toDF("id", "text") // every line a later copy
     val got = CorpusOps.dedupParagraphs(docs, "id", "text", minChars = 5)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3))).toMap
     // doc 1 owns the first occurrence of the dup; everything kept
@@ -640,11 +644,13 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got(2L) == (("unique b\nab", 2L, 2L)), got(2L).toString)
     // within-doc duplicates: first position wins
     assert(got(3L) == (("same line here", 1L, 1L)), got(3L).toString)
+    // a document whose every line is removed comes back empty, not dropped
+    assert(got(4L) == (("", 0L, 2L)), got(4L).toString)
     // vs removeBoilerplateLines: that form drops ALL occurrences of
     // frequent lines — this one always preserves exactly one copy
     val all = CorpusOps.dedupParagraphs(docs, "id", "text", minChars = 5)
       .agg(sum(col("n_kept"))).head().getLong(0)
-    assert(all == 6L) // 9 lines - 3 dropped copies
+    assert(all == 6L) // 11 lines - 5 dropped copies
   }
 
   test("stupidBackoffScore: each tier of the ladder, closed form") {
