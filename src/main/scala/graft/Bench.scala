@@ -19,7 +19,10 @@ object Bench {
     * run-to-run, so they are stripped. [[planHash]] hashes this text and
     * [[PlanDump]] writes it, so two commits' dumps diff cleanly: a diff
     * that survives is a plan change (a lost broadcast, a new exchange)
-    * that wall-clock noise can hide.
+    * that wall-clock noise can hide. It is plan TEXT, not plan shape:
+    * aggregate and alias names print in it, so renaming an internal
+    * column moves the hash with the same operators — diff the dumps
+    * before calling a hash change a plan change.
     */
   def canonicalPlan(plan: String): String =
     plan

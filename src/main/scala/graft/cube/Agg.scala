@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * per-accumulator merge): [[remerge]] for a finished value that merges
   * as it stands, or [[Agg.Quotient]] parts for a quotient that does not.
   * [[Agg.merge]] is the one re-aggregation built from those rules — the
-  * CuttingBoard's slice reuse and append maintenance and the salted
-  * two-phase aggregation all run it.
+  * CuttingBoard's slice reuse, its append and delete maintenance and the
+  * salted two-phase aggregation all run it.
   */
 sealed trait Agg {
   /** Build the aggregate Column for measure expression `c`. */
@@ -32,7 +32,8 @@ sealed trait Agg {
   def mergeable: Boolean = remerge.isDefined
 
   /** Deleting rows is undone at delta cost: the cached form (finished
-    * value or quotient parts) is a linear sum of per-row contributions.
+    * value or quotient parts) is a linear sum of per-row contributions,
+    * so the deleted rows' slice is merged as a negated delta.
     */
   def invertible: Boolean = false
 }
@@ -44,9 +45,9 @@ object Agg {
 
   /** An accumulator whose finished value divides additive parts (Σx,
     * Σx², counts). The parts ride the aggregation as hidden companion
-    * columns ([[companions]]), merge by summing and invert by
-    * subtracting; the finished value is rebuilt from them after — never
-    * avg-of-avgs.
+    * columns ([[companions]]) and merge by summing — a delete merges
+    * them as a negated delta; the finished value is rebuilt from them
+    * after — never avg-of-avgs.
     */
   sealed trait Quotient extends Agg {
     /** The parts as (suffix, aggregate over measure expression `c`). */
@@ -193,10 +194,10 @@ object Agg {
       case _                   => Nil
     }
 
-  /** Rebuild each quotient of `ms`, in its own column, from the (merged
-    * or inverted) companion columns of `df`.
+  /** Rebuild each quotient of `ms`, in its own column, from the merged
+    * companion columns of `df`.
     */
-  def rebuilt(df: DataFrame, ms: Seq[Spec]): DataFrame =
+  private def rebuilt(df: DataFrame, ms: Seq[Spec]): DataFrame =
     ms.foldLeft(df) {
       case (acc, (v, _, q: Quotient)) =>
         acc.withColumn(v, q.rebuild(s => col(s"__m_${v}_$s"), col("__m_n")))

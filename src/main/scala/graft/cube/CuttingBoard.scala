@@ -20,7 +20,8 @@ import graft.ops.Relational
   *    dashboard drill-down after the first scan is served from it.
   *
   * [[Agg]] owns the merge rules, and the board runs its one merge
-  * ([[Agg.merge]]) for both a coarser-than-cached query and `append`:
+  * ([[Agg.merge]]) for a coarser-than-cached query, `append` and
+  * `delete` (the deleted rows' slice merged as a negated delta):
   * Sum/Min/Max/Count/Union merge their finished values; the quotient
   * accumulators Avg/StdDev/RatioSum merge through the hidden companion
   * columns every cached slice carries ([[Agg.companions]]) and are
@@ -37,7 +38,9 @@ import graft.ops.Relational
   * folds into the LocalRelation at plan time and collects with no Spark
   * job; a reuse hit re-aggregates it through [[Agg.merge]] in one
   * single-task job with no shuffle. A larger slice stays a persisted
-  * frame (`storageLevel`). A board dropped without [[clear]] leaves
+  * frame (MEMORY_AND_DISK). Every served frame is ordered and limited
+  * by [[Slicer.present]], the rule a fresh slice ends with, so a hit
+  * lists the rows a miss would. A board dropped without [[clear]] leaves
   * nothing persisted behind for its driver-held slices.
   *
   * Persistence: with `warehouseDir` set, every cached slice is ALSO
@@ -84,7 +87,6 @@ final class CuttingBoard(
     initialDataset: DataFrame,
     val cubedef: CubeDef,
     maxSlices: Int = 20,
-    storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     warehouseDir: Option[String] = None,
     maxAgeMillis: Option[Long] = None,
     datasetSource: Option[() => DataFrame] = None,
@@ -315,25 +317,22 @@ final class CuttingBoard(
     */
   def append(delta: DataFrame): Unit = synchronized {
     current = current.unionByName(delta)
-    maintain(delta, _.mergeable) { (c, deltaSlice) =>
-      // the reuse merge at the slice's own grain, over cached ∪ delta
-      Agg.merge(c.df.unionByName(deltaSlice), c.q.axes.map(col), specs(c.q.valuesInSlice))
-    }
+    maintain(delta, _.mergeable, negate = false)
   }
 
   /** Incremental DELETE maintenance — the takedown face of [[append]]:
     * the dataset shrinks by `deleted` and every cached slice is brought
     * current without touching the (100 TB) base table. A slice whose
-    * measures are all [[Agg.invertible]] is updated at delta cost: slice
-    * the deleted rows with the slice's own query, left-join on the axes,
-    * subtract. Invertible means the cached form is a linear sum of
+    * measures are all [[Agg.invertible]] is updated at delta cost: the
+    * deleted rows' slice is merged as a negated delta — every measure
+    * and companion column negated, then the same [[Agg.merge]] as
+    * [[append]]. Invertible means the cached form is a linear sum of
     * per-row contributions: Sum and Count directly, and Avg/StdDev/
-    * RatioSum through their companions — components subtract, the
-    * finished quotient is rebuilt after. The always-present __m_n
-    * companion (count(*)) is the SUPPORT indicator, so a group all of
-    * whose rows were deleted drops out entirely (a zero-support row would
-    * be observably wrong, not just stale) — a Sum-only slice no longer
-    * needs an explicit Count measure for that.
+    * RatioSum through their companions — the finished quotient is
+    * rebuilt after. The always-present __m_n companion (count(*)) is the
+    * SUPPORT indicator, so a group all of whose rows were deleted drops
+    * out entirely (a zero-support row would be observably wrong, not
+    * just stale) — a Sum-only slice needs no explicit Count for that.
     * Min/Max/Union/GroupConsistent (and the distinct-count family) still
     * evict + recompute on next touch: they are not invertible from any
     * bounded cached form (deleting the max leaves no way to find the
@@ -357,60 +356,43 @@ final class CuttingBoard(
     */
   def delete(deleted: DataFrame, keyCols: Seq[String] = Seq.empty): Unit = synchronized {
     val base = current
-    val deletedRows =
-      if (keyCols.isEmpty) deleted
-      else base.join(deleted.select(keyCols.map(col): _*).distinct(),
-        keyCols, "left_semi")
-    current =
-      if (keyCols.nonEmpty)
-        base.join(deleted.select(keyCols.map(col): _*).distinct(),
-          keyCols, "left_anti")
-      else base.exceptAll(deleted)
-    maintain(deletedRows, _.invertible) { (c, deltaSlice) =>
-      val ms = specs(c.q.valuesInSlice)
-      val axes = c.q.axes
-      // equi-join key even for the grand-total (axis-less) slice: a
-      // constant column keeps the plan a hash join, never a
-      // BroadcastNestedLoopJoin
-      val joinKeys = if (axes.nonEmpty) axes else Seq("__one")
-      val lhs = if (axes.nonEmpty) c.df else c.df.withColumn("__one", lit(1))
-      val rhs0 = if (axes.nonEmpty) deltaSlice
-        else deltaSlice.withColumn("__one", lit(1))
-      // subtracted columns: finished values that are linear on their own
-      // (Sum/Count) and every companion; quotients are rebuilt after
-      val subCols = ms.collect { case (v, _, a) if a.remerge.isDefined => v } ++
-        Agg.companions(ms).map(_._1)
-      val rhs = rhs0.select(joinKeys.map(k => col(k).as(s"__k_$k")) ++
-        subCols.map(v => col(v).as(s"__d_$v")): _*)
-      // null-SAFE key equality: a NULL group (null axis value) must
-      // still meet its delta row, or its measures silently stay stale
-      val joinCond = joinKeys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-      val inverted = lhs.join(rhs, joinCond, "left")
-        .select(axes.map(col) ++ subCols.map(v => (col(v) - coalesce(col(s"__d_$v"),
-          lit(0).cast("long"))).as(v)): _*)
-      Agg.rebuilt(inverted, ms).where(col("__m_n") > 0)
-    }
+    val (deletedRows, rest) =
+      if (keyCols.isEmpty) (deleted, base.exceptAll(deleted))
+      else {
+        val keys = deleted.select(keyCols.map(col): _*).distinct()
+        (base.join(keys, keyCols, "left_semi"), base.join(keys, keyCols, "left_anti"))
+      }
+    current = rest
+    maintain(deletedRows, _.invertible, negate = true)
   }
 
   /** Bring every cached slice current after its base rows changed by
-    * `rows`: `update` computes the new slice from the cached frame and
-    * `rows` sliced with the slice's own query (same wide layout); the
-    * result replaces the slice and its warehouse table. A slice with a
-    * measure failing `keep` is evicted instead, warehouse table included,
-    * and recomputes on next touch.
+    * `rows` — added, or removed when `negate`. `rows` is sliced with the
+    * slice's own query (same wide layout), every non-axis column of that
+    * delta is negated for a removal (unary minus keeps the type), and
+    * cached ∪ delta is merged at the slice's own grain by [[Agg.merge]];
+    * after a removal, groups left with no rows (`__m_n` = 0) drop out.
+    * The result replaces the slice and its warehouse table. A slice with
+    * a measure failing `keep` is evicted instead, warehouse table
+    * included, and recomputes on next touch.
     */
-  private def maintain(rows: DataFrame, keep: Agg => Boolean)(
-      update: (Cached, DataFrame) => DataFrame): Unit = {
+  private def maintain(rows: DataFrame, keep: Agg => Boolean, negate: Boolean): Unit = {
     cache = cache.flatMap { c =>
-      val layout = c.df.columns.map(col)
-      if (!specs(c.q.valuesInSlice).forall(m => keep(m._3))) {
+      val ms = specs(c.q.valuesInSlice)
+      if (!ms.forall(m => keep(m._3))) {
         c.df.unpersist()
         dropPersisted(c.q)
         None
       } else {
-        val deltaSlice = Slicer.slice(rows, cubedef, c.q,
-          extraAggs = companionAggs(c.q.valuesInSlice)).select(layout: _*)
-        val (persisted, n) = materialize(c.q, update(c, deltaSlice).select(layout: _*))
+        val layout = c.df.columns.toSeq
+        val signed = layout.map { v =>
+          if (negate && !c.q.axes.contains(v)) (-col(v)).as(v) else col(v)
+        }
+        val delta = Slicer.slice(rows, cubedef, c.q,
+          extraAggs = companionAggs(c.q.valuesInSlice)).select(signed: _*)
+        val merged = Agg.merge(c.df.unionByName(delta), c.q.axes.map(col), ms)
+        val kept = if (negate) merged.where(col("__m_n") > 0) else merged
+        val (persisted, n) = materialize(c.q, kept.select(layout.map(col): _*))
         c.df.unpersist()
         Some(Cached(c.q, persisted, n))
       }
@@ -481,7 +463,7 @@ final class CuttingBoard(
     * collect stops at the bound and the count fills the rest.
     */
   private def hold(stored: DataFrame): (DataFrame, Long) = {
-    val p = stored.persist(storageLevel)
+    val p = stored.persist(StorageLevel.MEMORY_AND_DISK)
     Relational.collectIfAtMost(p.coalesce(1), CuttingBoard.LocalRows) match {
       case Some(rows) =>
         p.unpersist()
@@ -721,7 +703,7 @@ final class CuttingBoard(
           q.axes.map(col) :+ (if (c.q.valuesInSlice.isEmpty) col("count")
             else col("__m_n").as("count"))
         else (q.axes ++ q.values).map(col)
-      return Some(finish(c.df.select(served: _*), q))
+      return Some(Slicer.present(c.df.select(served: _*), q))
     }
 
     // Strategy 2: re-aggregate a finer cached slice. Conditions mirror
@@ -776,23 +758,10 @@ final class CuttingBoard(
       val (ms, out) =
         if (q.valuesInSlice.isEmpty) (Nil, q.axes.map(col) :+ col("__m_n").as("count"))
         else (specs(q.valuesInSlice), (q.axes ++ q.values).map(col))
-      return Some(finish(Agg.merge(filtered, axisCols, ms).select(out: _*), q))
+      return Some(Slicer.present(Agg.merge(filtered, axisCols, ms).select(out: _*), q))
     }
 
     None
-  }
-
-  /** Apply presentation (order/limit) on a served slice. */
-  private def finish(df: DataFrame, q: CubeQuery): DataFrame = {
-    val ordered =
-      if (q.order.isEmpty) df
-      else df.orderBy(q.order.map(o =>
-        if (o.ascending) col(o.name).asc_nulls_first else col(o.name).desc_nulls_last): _*)
-    val limited = q.limit match {
-      case Some(n) => q.offset.fold(ordered.limit(n))(o => ordered.offset(o).limit(n))
-      case None    => q.offset.fold(ordered)(o => ordered.offset(o))
-    }
-    limited
   }
 
   /** Unpersist everything (end of session). */

@@ -122,33 +122,36 @@ object Slicer {
         grouped.agg(out.head, out.tail: _*)
       }
 
-    val ordered = applyOrder(result, q)
-    val limited = q.limit match {
-      case Some(n) => q.offset.fold(ordered.limit(n))(o => ordered.offset(o).limit(n))
-      case None    => q.offset.fold(ordered)(o => ordered.offset(o))
-    }
-    limited
+    present(result, q)
   }
 
-  private def applyOrder(df: DataFrame, q: CubeQuery): DataFrame = {
-    if (q.order.isEmpty) return df
-    val cols = q.order.map { o =>
-      // bacon/cubequery.py:278 — with a pivot key the sort targets that
-      // pivoted column rather than the measure-totals column. With ONE
-      // measure Spark names the pivoted column after the pivot value
-      // alone; with several it suffixes the measure (`x_sum_v`), so the
-      // ordered measure's suffix selects the right one.
-      val name = o.pivotKey.mkString("/") match {
-        case pv if o.pivotKey.nonEmpty && df.columns.contains(pv) => pv
-        case pv if o.pivotKey.nonEmpty && df.columns.contains(s"${pv}_${o.name}") =>
-          s"${pv}_${o.name}"
-        case _ => o.name
+  /** Presentation: order by `q.order` with a stable tie-break on the row
+    * axes present in `df`, then offset and limit. [[slice]] ends with it,
+    * and so does every frame the [[CuttingBoard]] serves, so a cache hit
+    * lists the same rows, in the same order, as a fresh slice.
+    */
+  private[cube] def present(df: DataFrame, q: CubeQuery): DataFrame = {
+    val ordered = if (q.order.isEmpty) df else {
+      val cols = q.order.map { o =>
+        // bacon/cubequery.py:278 — with a pivot key the sort targets that
+        // pivoted column rather than the measure-totals column. With ONE
+        // measure Spark names the pivoted column after the pivot value
+        // alone; with several it suffixes the measure (`x_sum_v`), so the
+        // ordered measure's suffix selects the right one.
+        val name = o.pivotKey.mkString("/") match {
+          case pv if o.pivotKey.nonEmpty && df.columns.contains(pv) => pv
+          case pv if o.pivotKey.nonEmpty && df.columns.contains(s"${pv}_${o.name}") =>
+            s"${pv}_${o.name}"
+          case _ => o.name
+        }
+        val c = col(name)
+        if (o.ascending) c.asc_nulls_first else c.desc_nulls_last
       }
-      val c = col(name)
-      if (o.ascending) c.asc_nulls_first else c.desc_nulls_last
+      // stable tiebreak on the row axes that exist in the output
+      val ties = q.rowAxes.filter(df.columns.contains).map(col(_).asc_nulls_first)
+      df.orderBy(cols ++ ties: _*)
     }
-    // stable tiebreak on the row axes that exist in the output
-    val ties = q.rowAxes.filter(df.columns.contains).map(col(_).asc_nulls_first)
-    df.orderBy(cols ++ ties: _*)
+    val skipped = q.offset.fold(ordered)(ordered.offset)
+    q.limit.fold(skipped)(skipped.limit)
   }
 }

@@ -1070,4 +1070,101 @@ class CuttingBoardSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty,
       "every slice here fits the driver-held bound: nothing may stay persisted")
   }
+
+  test("served slices order, tie-break and limit by Slicer.slice's rule (exact and reuse hits)") {
+    // every sum_v ties at 1.0, so only the row-axis tie-break decides
+    // which rows an ordered, limited query lists
+    val keys = Seq("x", "d", "m", "a", "y", "c", "k", "b", "e", "l", "f", "j")
+    val df = keys.flatMap(k => Seq((k, "p", 0.25), (k, "q", 0.75))).toDF("k", "s", "v")
+    val cube = CubeDef(
+      labels = Seq(Label("k"), Label("s")),
+      measures = Seq(Measure("sum_v", col("v"), Agg.Sum)))
+    val coarse = CubeQuery().addAxis("k").addValue("sum_v")
+    val presented = Seq(
+      coarse.orderBy("-sum_v").setLimit(3),
+      coarse.orderBy("-sum_v").setLimit(3).setOffset(2),
+      coarse.orderBy("sum_v").setOffset(9))
+    def rows(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq).toSeq
+    // cached at the query's own grain (exact hits) and one axis finer
+    // (reuse hits)
+    Seq(coarse, coarse.addAxis("s")).foreach { cached =>
+      val board = new CuttingBoard(df, cube)
+      board.slice(cached).collect()
+      presented.foreach { q =>
+        assert(rows(board.slice(q)) == rows(Slicer.slice(df, cube, q)), s"$q served from $cached")
+      }
+      assert(board.stats == (3L, 1L) && board.lastServedFrom.contains(cached))
+      board.clear()
+    }
+  }
+
+  test("long append / multiset-delete / key-delete sequences keep every slice a hit equal to Slicer.slice") {
+    val rng = new scala.util.Random(17)
+    val ks = Vector(Some("A"), Some("B"), Some("C"), None)
+    var nextId = 0L
+    def fresh(k: Option[String]) = {
+      nextId += 1
+      (nextId, k, if (rng.nextBoolean()) "x" else "y", rng.nextInt(20) * 0.5, 1.0 + rng.nextInt(4))
+    }
+    // the NULL-k group is small so a key delete can empty it
+    var model = Vector.fill(36)(fresh(ks(rng.nextInt(3)))) ++ Vector.fill(4)(fresh(None))
+    def frame(rs: Seq[(Long, Option[String], String, Double, Double)]) =
+      rs.toDF("id", "k", "s", "v", "d")
+    val cube = CubeDef(
+      labels = Seq(Label("k"), Label("s")),
+      measures = Seq(
+        Measure("sum_v", col("v"), Agg.Sum),
+        Measure("n", lit(1), Agg.Count),
+        Measure("avg_v", col("v"), Agg.Avg),
+        Measure("sd_v", col("v"), Agg.StdDev),
+        Measure("ratio", lit(1), Agg.Ratio(col("v"), col("d")))))
+    val slices = Seq(
+      CubeQuery().addAxis("k").addAxis("s").addValue("sum_v").addValue("n"),
+      CubeQuery().addAxis("k").addValue("avg_v").addValue("sd_v").addValue("ratio"),
+      CubeQuery().addAxis("s"),
+      CubeQuery().addValue("sum_v").addValue("n"))
+    val board = new CuttingBoard(frame(model), cube)
+    slices.foreach(q => board.slice(q).collect())
+    def close(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y))
+      case _ => a == b
+    }
+    def byAxes(f: org.apache.spark.sql.DataFrame, nAxes: Int) =
+      f.collect().map(r => r.toSeq.take(nAxes) -> r.toSeq.drop(nAxes)).toMap
+    (1 to 21).foreach { batch =>
+      batch % 3 match {
+        case 1 =>
+          // new rows, a NULL-k row and an exact copy of a live row
+          val added = Vector.fill(5)(fresh(ks(rng.nextInt(4)))) :+ fresh(None) :+
+            model(rng.nextInt(model.length))
+          board.append(frame(added))
+          model ++= added
+        case 2 =>
+          // multiset delete: one copy of each deleted row goes
+          val gone = rng.shuffle(model.indices.toVector).take(4)
+          board.delete(frame(gone.map(model)))
+          model = model.indices.filterNot(gone.contains).map(model).toVector
+        case _ =>
+          val ids =
+            if (batch == 6) model.filter(_._2.isEmpty).map(_._1).distinct
+            else rng.shuffle(model.map(_._1).distinct).take(3)
+          board.delete(ids.toDF("id"), keyCols = Seq("id"))
+          model = model.filterNot(r => ids.contains(r._1))
+      }
+      val (hits, misses) = board.stats
+      slices.foreach { q =>
+        val got = byAxes(board.slice(q), q.axes.length)
+        val want = byAxes(Slicer.slice(board.dataset, cube, q), q.axes.length)
+        assert(got.keySet == want.keySet, s"batch $batch, $q")
+        got.foreach { case (axes, vs) =>
+          assert(vs.length == want(axes).length &&
+            vs.zip(want(axes)).forall { case (a, b) => close(a, b) },
+            s"batch $batch, $q, group $axes: $vs vs ${want(axes)}")
+        }
+      }
+      assert(board.stats == (hits + slices.length, misses), s"batch $batch: every slice must stay a hit")
+    }
+    assert(board.dataset.count() == model.length.toLong)
+    board.clear()
+  }
 }
