@@ -2,8 +2,6 @@ package graft
 
 import java.util.regex.Matcher
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (or args(0)) and prints ONE JSON line. Per-query
   * value = median wall of SPARK_GRAFT_BENCH_REPS runs (default 3);
@@ -77,8 +75,8 @@ object Bench {
     * plan (the counter runs monotonically from the pinned base during
     * one construction; a plan allocating past another query's base is
     * harmless, ids only collide across plans that never meet) and
-    * nothing in graft holds live frames across gate invocations (the
-    * per-JVM stores cache PATHS, never plans); Spark's own cross-plan
+    * nothing in graft holds live frames across gate invocations (a
+    * [[JvmStore]] caches PATHS, never plans); Spark's own cross-plan
     * machinery (CacheManager lookups) compares canonicalized plans,
     * which are id-insensitive by construction.
     */
@@ -101,14 +99,7 @@ object Bench {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The two sanctioned BoundedSpine windows (q35/t08 — O(B) spines,
     // see graft.ops.BoundedSpine) would spam ~10 "No Partition Defined"

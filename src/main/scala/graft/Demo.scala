@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.cube._
 import graft.tables.Tpch
 
@@ -10,12 +9,7 @@ import graft.tables.Tpch
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val board = new CuttingBoard(Tpch.table(spark, sfDir, "lineitem"), Tpch.lineitemCube)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-hygiene audit: derives every SparkEntry query's physical plan
   * and flags nested-loop / cartesian joins — the two shapes that turn
@@ -44,11 +43,7 @@ object PlanAudit {
   private val KnownBoundedSpine = Set("q35_running_total", "t08_epoch_shuffle")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     var unexpected = 0

@@ -1,17 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: dump ONE gate query's physical plan to a file, from a
-  * fresh session with the bench session shape (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) and the query's expression-id counter
-  * pinned as Bench pins it ([[Bench.pinExprIds]]). The text written is
+  * fresh session built exactly as Bench builds its own ([[Session.local]]
+  * with no overrides) and the query's expression-id counter pinned as
+  * Bench pins it ([[Bench.pinExprIds]]). The text written is
   * [[Bench.canonicalPlan]] — the same text Bench hashes into its `plans`
   * map — so a cross-commit plan-hash diff is adjudicated by running
   * this at both commits and diffing the dumps: identical output means
-  * the plans are the same, a real diff is a plan change. At the same
-  * SPARK_GRAFT_CPUS and sf dir, the first 12 hex digits of the dump's
-  * MD5 are the query's Bench hash.
+  * the plans are the same, a real diff is a plan change. Both mains take
+  * one session builder, so at the same SPARK_GRAFT_CPUS and sf dir the
+  * first 12 hex digits of the dump's MD5 are the query's Bench hash by
+  * construction.
   *
   *   runMain graft.PlanDump <queryName> <outFile> [sfDir] [formatted]
   *
@@ -24,12 +23,7 @@ object PlanDump {
     require(args.length >= 2, "usage: PlanDump <queryName> <outFile> [sfDir] [formatted]")
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
     val formatted = args.length > 3 && args(3) == "formatted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Bench.pinExprIds(args(0))
     val df = SparkEntry.queries(args(0))(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence data generator: replicates the driver's sf0.1 tables
@@ -36,13 +36,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <dstDir> [factor]")
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local().config("spark.sql.shuffle.partitions", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

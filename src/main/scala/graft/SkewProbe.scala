@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew-evidence probe for the LSH grid salt (diagnostic, not part of
@@ -37,18 +36,14 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val clusterSize = args.headOption.map(_.toInt).getOrElse(2500)
     val fireFreq = if (args.length > 1) args(1).toLong else 1000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 256 shuffle partitions with AQE coalescing off = the production
     // shape (partitions ≫ hot buckets). At the bench's cores-sized
     // partition count the 16 per-table hot buckets spread over the 32
     // partitions by accident and the straggler hides; at scale a join
     // runs thousands of partitions and each hot bucket IS one task.
-    val spark = SparkSession.builder().master(s"local[$cpus]")
+    val spark = Session.local()
       .config("spark.sql.shuffle.partitions", "256")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -61,7 +56,7 @@ object SkewProbe {
     val hot = spark.range(clusterSize.toLong)
       .select((col("id") + 1000000L).as("vec_id"),
         typedlit(v0).as("embedding"), lit(99).as("label"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = JvmStore.scratch("graft-skew")
     base.unionByName(hot).repartition(8)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val df = spark.read.parquet(s"$dir/embeddings.parquet")

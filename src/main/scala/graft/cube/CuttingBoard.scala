@@ -332,7 +332,9 @@ final class CuttingBoard(
     * rebuilt after. The always-present __m_n companion (count(*)) is the
     * SUPPORT indicator, so a group all of whose rows were deleted drops
     * out entirely (a zero-support row would be observably wrong, not
-    * just stale) — a Sum-only slice needs no explicit Count for that.
+    * just stale) — a Sum-only slice needs no explicit Count for that. A
+    * grand total keeps its one row, as [[Slicer.slice]] over no rows
+    * does.
     * Min/Max/Union/GroupConsistent (and the distinct-count family) still
     * evict + recompute on next touch: they are not invertible from any
     * bounded cached form (deleting the max leaves no way to find the
@@ -371,7 +373,9 @@ final class CuttingBoard(
     * slice's own query (same wide layout), every non-axis column of that
     * delta is negated for a removal (unary minus keeps the type), and
     * cached ∪ delta is merged at the slice's own grain by [[Agg.merge]];
-    * after a removal, groups left with no rows (`__m_n` = 0) drop out.
+    * after a removal, groups left with no rows (`__m_n` = 0) drop out,
+    * except an axis-less (grand-total) slice's one row, which becomes
+    * what [[Slicer.slice]] gives over no rows (NULL sums, zero counts).
     * The result replaces the slice and its warehouse table. A slice with
     * a measure failing `keep` is evicted instead, warehouse table
     * included, and recomputes on next touch.
@@ -391,7 +395,17 @@ final class CuttingBoard(
         val delta = Slicer.slice(rows, cubedef, c.q,
           extraAggs = companionAggs(c.q.valuesInSlice)).select(signed: _*)
         val merged = Agg.merge(c.df.unionByName(delta), c.q.axes.map(col), ms)
-        val kept = if (negate) merged.where(col("__m_n") > 0) else merged
+        val kept =
+          if (!negate) merged
+          else if (c.q.axes.nonEmpty) merged.where(col("__m_n") > 0)
+          else {
+            // a grand total keeps its one row: the slice of no rows is
+            // the merge's identity, so merging it in keeps the live row,
+            // or gives Slicer.slice's empty-input row once none is left
+            val empty = Slicer.slice(rows.limit(0), cubedef, c.q,
+              extraAggs = companionAggs(c.q.valuesInSlice))
+            Agg.merge(merged.where(col("__m_n") > 0).unionByName(empty), Nil, ms)
+          }
         val (persisted, n) = materialize(c.q, kept.select(layout.map(col): _*))
         c.df.unpersist()
         Some(Cached(c.q, persisted, n))

@@ -580,7 +580,7 @@ object Dedup {
     */
   /** JVM-wide verdict cache for [[gridSaltedSides]]' hot-bucket probe,
     * keyed by the caller-supplied `verdictKey` plus the grid parameters
-    * (the Queries.sampleTables convention). The probe is a real Spark
+    * (the [[graft.JvmStore]] once-per-JVM convention). The probe is a real Spark
     * job at PLAN-CONSTRUCTION time — the one eager action in the band
     * joins — so gates that rebuild their plan per invocation (bench
     * reps, Verify, PlanAudit's dry queryExecution derivation) would

@@ -1167,4 +1167,31 @@ class CuttingBoardSpec extends SparkSpec {
     assert(board.dataset.count() == model.length.toLong)
     board.clear()
   }
+
+  test("a grand total whose every row is deleted keeps Slicer.slice's one row, and appends refill it") {
+    val df = Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "A", 4.0)).toDF("id", "k", "v")
+    val cube = CubeDef(
+      labels = Seq(Label("k")),
+      measures = Seq(
+        Measure("sum_v", col("v"), Agg.Sum),
+        Measure("n", lit(1), Agg.Count),
+        Measure("avg_v", col("v"), Agg.Avg)))
+    val q = CubeQuery().addValue("sum_v").addValue("n").addValue("avg_v")
+    def rows(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq).toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-wh-total").toString
+    Seq(new CuttingBoard(df, cube), new CuttingBoard(df, cube, warehouseDir = Some(dir)))
+      .foreach { board =>
+        board.slice(q).collect()
+        board.delete(df.select("id"), keyCols = Seq("id"))
+        val emptied = rows(board.slice(q))
+        assert(emptied == rows(Slicer.slice(board.dataset, cube, q)))
+        assert(emptied == Seq(Seq(null, 0L, null)))
+        board.append(Seq((4L, "B", 3.0), (5L, "A", 5.0)).toDF("id", "k", "v"))
+        val refilled = rows(board.slice(q))
+        assert(refilled == rows(Slicer.slice(board.dataset, cube, q)))
+        assert(refilled == Seq(Seq(8.0, 2L, 4.0)))
+        assert(board.stats == (2L, 1L), "the grand total must stay a hit through both writes")
+        board.clear()
+      }
+  }
 }
