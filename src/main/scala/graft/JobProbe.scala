@@ -8,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * a listener that counts jobs / stages / tasks and sums task time, to
   * attribute wall-clock between real work and scheduling overhead —
   * the first question for iterative operators (duplicateClustersStar's
-  * per-round cost) and tiny-data queries where stage latency dominates.
+  * contraction rounds over its driver-finish bound) and tiny-data
+  * queries where stage latency dominates.
   *
   *   runMain graft.JobProbe <sfDir> <query> [query...]
   *
@@ -74,8 +75,7 @@ object JobProbe {
       println(f"[jobprobe] $n rep=$rep wall=$wall%.2fs jobs=${jobs.get} " +
         f"stages=${stages.get} tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2fs " +
         f"deser=${deserMs.get / 1000.0}%.2fs gc=${gcMs.get / 1000.0}%.2fs " +
-        f"shufR=${shufRead.get / 1e6}%.1fMB shufW=${shufWrite.get / 1e6}%.1fMB " +
-        f"ccRounds=${graft.dedup.Dedup.lastConvergenceRounds}")
+        f"shufR=${shufRead.get / 1e6}%.1fMB shufW=${shufWrite.get / 1e6}%.1fMB")
     }
     spark.stop()
   }

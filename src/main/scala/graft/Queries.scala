@@ -2007,7 +2007,7 @@ object Queries {
     },
 
     // §2.37b: duplicate clusters — connected components over the near-dup
-    // pair graph (min-label propagation; oracle = recursive closure)
+    // pair graph (Dedup.duplicateClustersStar; oracle = recursive closure)
     "d15_dup_clusters" -> oq(
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id,
@@ -2042,14 +2042,13 @@ object Queries {
       // oracle over exact pairs still validates the cluster labels.
       // Store-fed (dedupArtifacts): the signature pass is shared with
       // every other LSH consumer, spec-pinned == the direct call.
-      graft.dedup.Dedup.duplicateClusters(minhashPairsFromStore(s, dir))
+      graft.dedup.Dedup.duplicateClustersStar(minhashPairsFromStore(s, dir))
     },
 
-    // §2.37c: the same cluster labels via star contraction
-    // (large-star/small-star, Kiveris et al. SoCC 2014) — the
-    // chain-graph-safe CC variant, validated against the identical
-    // recursive-CTE oracle as d15 so both distributed algorithms are
-    // oracle-checked, not just spec-equivalent to each other.
+    // §2.37c: the same cluster labels by the same operator as d15 — graft
+    // has one CC operator, duplicateClustersStar. Both keys stay in the
+    // oracle inventory: d15 and d30 are the survey's two CC rows (37b/37c),
+    // and each is checked against the identical recursive-CTE oracle.
     "d30_dup_clusters_star" -> oq(
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id,
@@ -2094,9 +2093,11 @@ object Queries {
     //    to the global min multiple of 3.
     //  - background: (i, i+3) two-node pairs at i % 30 == 1, so the gate
     //    also proves small components stay separate next to the giant.
-    // duplicateClustersStar's maxIter throw IS the round-count gate: a
-    // contraction that stops halving distances fails the query, at any
-    // sf. DedupSpec additionally pins the round bound explicitly.
+    // Under duplicateClustersStar's driver-finish bound (100k edge rows;
+    // d42 has about 3.4k at sf0.1) the graph is labelled on the driver and
+    // runs no round. Over it, the maxIter throw is the round-count gate: a
+    // contraction that stops halving distances fails the query. DedupSpec
+    // pins the round bound of the distributed rounds.
     "d42_cc_giant" -> oq(
       """WITH ids AS (SELECT doc_id FROM documents),
         |mm AS (SELECT min(CASE WHEN doc_id % 3 = 0 THEN doc_id END) AS m0,

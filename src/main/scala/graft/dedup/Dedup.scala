@@ -1,8 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import graft.ops.Relational
 import graft.text.TextFunctions._
 
 /** Deduplication family for web-scale corpora.
@@ -202,8 +207,9 @@ object Dedup {
     * the ranking replays identically on any engine). Returns the
     * surviving rows of `df`, original columns intact.
     *
-    * Scale shape: clusters come from [[duplicateClusters]] (pair-graph
-    * sized, not corpus sized); winners are one `max_by` aggregation over
+    * Scale shape: clusters come from [[duplicateClustersStar]]
+    * (pair-graph sized, not corpus sized; a driver-held table when the
+    * graph is small); winners are one `max_by` aggregation over
     * ONLY the clustered rows (score + negated id packed in a struct —
     * no window, no row_number shuffle over the full corpus); the final
     * step is a single left-anti join of the corpus against the
@@ -214,7 +220,7 @@ object Dedup {
   def keepBestInCluster(df: DataFrame, idCol: String, pairs: DataFrame,
                         scoreCol: org.apache.spark.sql.Column,
                         id1: String = "id1", id2: String = "id2"): DataFrame = {
-    val clusters = duplicateClusters(pairs, id1, id2) // (id, cluster_id)
+    val clusters = duplicateClustersStar(pairs, id1, id2) // (id, cluster_id)
     val scored = df.select(col(idCol).cast("long").as("__did"), scoreCol.as("__score"))
     val winners = scored.join(clusters, col("__did") === col("id"))
       .groupBy(col("cluster_id"))
@@ -228,98 +234,10 @@ object Dedup {
     df.join(losers, df(idCol).cast("long") === col("__lose"), "left_anti")
   }
 
-  /** Duplicate clusters from near-dup pairs: every id is labeled with the
-    * minimum id reachable through the pair graph (connected components).
-    * Iterative min-label propagation PLUS pointer jumping (path halving):
-    * each round a node takes the min of its own label, its neighbours'
-    * labels, and its label's label (comp(comp(id)) — one hop along the
-    * current pointer graph). The extra hop doubles the collapsed distance
-    * per round, so convergence needs O(log diameter) rounds instead of
-    * O(diameter) — the small-star/large-star bound — which is what makes
-    * the worst case (long chains of borderline near-dups) safe at scale.
-    * For typical dense near-dup clusters it converges in 2-3 rounds
-    * either way.
-    *
-    * Scale/perf design:
-    *  - The (often expensive) upstream pair computation is evaluated
-    *    exactly once: both edge directions come from one explode, not a
-    *    self-union that re-runs the plan per branch.
-    *  - The seed already folds in propagation round 1
-    *    (comp₀ = min(id, min(neighbours))), saving one full round.
-    *  - ONE Spark action per round: the convergence flag is folded into
-    *    the aggregate that materializes the persisted frame
-    *    (`max(__chg)`), instead of a separate isEmpty + count pair.
-    *  - Lineage is truncated with localCheckpoint every 5 rounds so
-    *    planning cost stays constant on high-diameter graphs.
-    */
-  def duplicateClusters(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
-                        maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(explode(array(
-        struct(col(id1).as("src"), col(id2).as("dst")),
-        struct(col(id2).as("src"), col(id1).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().persist()
-    // Seed = round 1: every node takes the min of itself and its direct
-    // neighbours (all nodes appear as src because edges are symmetric).
-    var labels: DataFrame = edges.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("comp"))
-      .select(col("src").as("id"), col("comp"))
-      .persist()
-    // NOT loop-repartitioned like duplicateClustersStar: this path is
-    // the DENSE-graph default that converges in 2-3 rounds, so a
-    // measured edge count + pre-partitioned edge cache + per-round
-    // re-keying cost MORE than they save (measured at sf0.1: d15
-    // 0.47 → 1.48 s, d34 0.97 → 1.86 s with the star treatment applied
-    // here — reverted). High-diameter graphs, where the loop shape
-    // dominates, take duplicateClustersStar, which is loop-partitioned.
-    var iter = 1
-    var changed = true
-    while (changed && iter < maxIter) {
-      val nbr = labels.select(col("id").as("nid"), col("comp").as("ncomp"))
-      val nbrMin = edges.join(nbr, col("dst") === col("nid"))
-        .groupBy(col("src")).agg(min(col("ncomp")).as("nbr_comp"))
-      // pointer jump: comp(comp(id)). Labels are node ids, so the lookup
-      // is an equi-join of the (persisted) label table with itself; it
-      // halves pointer chains every round, giving the log-diameter bound.
-      val jump = labels.select(col("id").as("jid"), col("comp").as("jcomp"))
-      val next = labels
-        .join(nbrMin, col("id") === col("src"), "left")
-        .join(jump, col("comp") === col("jid"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp")),
-            coalesce(col("jcomp"), col("comp"))).as("comp"),
-          (least(coalesce(col("nbr_comp"), col("comp")),
-            coalesce(col("jcomp"), col("comp"))) < col("comp")).as("__chg"))
-        .persist()
-      // Single action: materializes `next` into the cache AND answers
-      // whether this round changed anything.
-      changed = next.agg(coalesce(max(col("__chg")), lit(false)))
-        .first().getBoolean(0)
-      val prev = labels
-      labels =
-        if (iter % 5 == 0) {
-          val lc = next.select("id", "comp").localCheckpoint(true)
-          next.unpersist()
-          lc
-        } else next
-      prev.unpersist()
-      iter += 1
-    }
-    if (changed) {
-      // Callers must not silently receive partial labels (ADVICE r2).
-      throw new IllegalStateException(
-        s"duplicateClusters did not converge within maxIter=$maxIter rounds " +
-          "(pair-graph diameter too large); raise maxIter")
-    }
-    edges.unpersist()
-    lastConvergenceRounds = iter
-    labels.select(col("id"), col("comp").as("cluster_id"))
-  }
-
-  /** Partition count for a contraction/propagation loop's exchanges,
-    * sized from the MEASURED row count of the loop's largest frame
-    * (~4M two-long rows ≈ 64–128 MB a partition, the guide's advisory
-    * range) instead of the session's shuffle partitions — the session
+  /** Partition count for the contraction loop's exchanges, sized from
+    * the MEASURED row count of the loop's largest frame (~4M two-long
+    * rows ≈ 64–128 MB a partition, the guide's advisory range) instead
+    * of the session's shuffle partitions — the session
     * constant is tuned for corpus-sized scans and over-splits the
     * loop-sized frames by orders of magnitude (measured on d42 at
     * sf0.1: 2,966 tasks / 139 s summed task time for 2 MB of shuffle).
@@ -344,158 +262,218 @@ object Dedup {
     math.max(1L, math.max(bySize, byCores)).toInt
   }
 
-  /** Diagnostic: rounds the last duplicateClusters call used (including
-    * the final no-change round). Lets specs pin the O(log diameter)
-    * convergence bound without exposing internals in the result.
+  /** Pair or edge rows at or under which connected components finish
+    * on the driver. A union-find over 100k edges takes milliseconds, and
+    * its labels fit a driver-held table the size CuttingBoard holds its
+    * slices at; a distributed contraction round costs at least two jobs
+    * whatever its size.
     */
-  @volatile private[graft] var lastConvergenceRounds: Int = 0
+  private val DriverFinishRows = 100000L
 
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014) — the chain-graph-safe fallback to
-    * [[duplicateClusters]].
+  /** Duplicate clusters: connected components of the pair graph. The
+    * output (id, cluster_id) has one row for every id in `pairs`, with
+    * cluster_id the minimum id of its component; a NULL id joins no
+    * component and gets (NULL, NULL). Throws rather than return partial
+    * labels if `maxIter` rounds do not converge.
     *
+    * A graph of at most [[DriverFinishRows]] pair rows is collected in
+    * one job and labelled on the driver by union-find; the labels come
+    * back as a driver-held [[graft.ops.Relational.localTable]], so
+    * filters and joins over them run no job of their own. A larger graph
+    * runs alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+    * until its edge set fits the bound, then finishes the same way and
+    * joins the labels back to the ids.
     * Per alternating round, every node re-points its neighborhood at the
     * neighborhood minimum: large-star re-points strictly LARGER
-    * neighbors, small-star the rest. The edge set it carries CONTRACTS
-    * monotonically toward one star per component (root = component min),
-    * so late rounds shuffle a fraction of E — where min-label
-    * propagation's neighbor join carries the FULL edge set every round.
-    * On the dense near-dup graphs dedup produces, propagation + pointer
-    * jumping converges in fewer rounds and stays the default (d15); this
-    * variant bounds the pathological high-diameter case (chains of
-    * hub-bridged near-dup groups) at O(log n) rounds with shrinking
-    * volume, which is the safer shape for an unknown 100 TB pair graph.
-    *
-    * Same contract as duplicateClusters: output (id, cluster_id =
-    * component-min id) for every id appearing in `pairs`; throws rather
-    * than returning partial labels if maxIter rounds don't converge.
-    * Two Spark actions per round: the per-round localCheckpoint (see
-    * the loop comment) and the count+checksum convergence aggregate.
+    * neighbors, small-star the rest. The edge set CONTRACTS monotonically
+    * toward one star per component (root = component min), so late
+    * rounds shuffle a fraction of E, and rounds stay O(log n) on the
+    * pathological high-diameter shape (chains of hub-bridged near-dup
+    * groups). Ids of a non-integral type run the rounds to convergence:
+    * the driver union-find orders ids as longs.
     */
   def duplicateClustersStar(pairs: DataFrame, id1: String = "id1",
-                            id2: String = "id2", maxIter: Int = 30): DataFrame = {
-    val nodes = pairs.select(col(id1).as("n"))
-      .unionByName(pairs.select(col(id2).as("n"))).distinct().persist()
-    // Canonical undirected edges u < v.
-    var edges = pairs
-      .select(least(col(id1), col(id2)).as("u"), greatest(col(id1), col(id2)).as("v"))
-      .where(col("u") =!= col("v")).distinct().persist()
-    // (count, checksum) fingerprint of the materialized edge set — the
-    // convergence test, folded into the one action that caches it.
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      // bit_xor, not sum: ANSI mode faults on wrap-around, and XOR over
-      // the (distinct) edge hashes is order-independent by construction.
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
+                            id2: String = "id2", maxIter: Int = 30): DataFrame =
+    contractComponents(pairs, id1, id2, maxIter, DriverFinishRows)._1
+
+  /** [[duplicateClustersStar]] with its driver-finish row bound as a
+    * parameter (0 runs the distributed rounds to convergence on any
+    * non-empty edge set). Returns the labels and the number of
+    * contraction rounds run.
+    */
+  private[dedup] def contractComponents(pairs: DataFrame, id1: String, id2: String,
+                                        maxIter: Int, finishRows: Long): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    val (a, b) = (col(id1), col(id2))
+    val nodes = pairs.select(a.as("n")).unionByName(pairs.select(b.as("n"))).distinct()
+    val idField = nodes.schema("n")
+    val bound = idField.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => finishRows
+      case _ => -1L
     }
-    var fp = fingerprint(edges)
-    // Scale-adaptive loop partitioning: every exchange inside the
-    // contraction is an EXPLICIT repartition to `p` partitions, sized
-    // from the measured initial edge count (~4M edge rows ≈ 64–128 MB a
-    // partition), instead of the session's shuffle.partitions — a
-    // constant tuned for corpus-sized scans is 1-2 orders too wide for
-    // the edge set, and the loop pays it per exchange per round (32-task
-    // stages over a few thousand rows dominated d42's wall: 2,966 tasks
-    // / 139 s summed task time for 2 MB of shuffle). The explicit
-    // repartition also lets the min-aggregate and the re-point join
-    // SHARE one exchange per phase (both need hash(u)); the implicit
-    // plan shuffled `sym` twice.
-    val p = loopPartitions(fp._1,
-      pairs.sparkSession.sparkContext.defaultParallelism)
-    // One phase: for every node, m = min(neighborhood ∪ self); re-point
-    // the selected side of each neighborhood at m. `keepLarger` selects
-    // large-star (strictly larger neighbors) vs small-star (the rest,
-    // including the node itself unless it IS the min).
-    def phase(e: DataFrame, keepLarger: Boolean): DataFrame = {
-      val sym = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-        .repartition(p, col("u"))
-      val m = sym.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
-      // SHUFFLE_HASH, not broadcast and not sort-merge: both sides hang
-      // off sym's one explicit hash(u, p) exchange, so the equi-join is
-      // exchange-free; a broadcast build would add a per-phase broadcast
-      // JOB (driver round-trip — the loop's wall is scheduling latency),
-      // and the AQE-off default (sort-merge) would sort both sides per
-      // phase. The build side (m, one row per live node) always fits: it
-      // shrinks with the contraction and `p` grows with the edge count.
-      val joined = sym.join(m.hint("SHUFFLE_HASH"), "u")
-      val out =
-        if (keepLarger)
-          // large-star(u): {(m, w) : w ∈ Γ(u), w > u}; m ≤ u < w keeps
-          // the (u, v) canonical orientation for free
-          joined.where(col("v") > col("u"))
-            .select(col("m").as("u"), col("v"))
-        else
-          // small-star(u): {(m, w) : w ∈ Γ(u), w ≤ u} ∪ {(m, u)}
-          joined.where(col("v") < col("u"))
-            .select(col("m").as("u"), col("v"))
-            .unionByName(m.select(col("m").as("u"), col("u").as("v")))
-      out.where(col("u") =!= col("v"))
-        .repartition(p, col("u"), col("v")).distinct()
+    def labelTable(rows: Array[Row], node: String, root: String): DataFrame =
+      Relational.localTable(spark, unionFind(rows),
+        StructType(Seq(idField.copy(name = node), idField.copy(name = root))))
+    // Raw pairs, not distinct edges: the union-find takes repeats,
+    // self-pairs and NULL ids, and a collect with no shuffle runs one job
+    val small = if (bound < 0) None else Relational.collectIfAtMost(
+      pairs.select(a.cast(idField.dataType), b.cast(idField.dataType)), bound)
+    small.map(rows => (labelTable(rows, "id", "cluster_id"), 0)).getOrElse {
+      // A star set (u, v) holds one star per component rooted at its min,
+      // every non-root once as v. Roots and ids in no edge label themselves.
+      def joinBack(star: DataFrame): DataFrame = nodes
+        .join(star.select(col("v").as("n"), col("u").as("c")), Seq("n"), "left")
+        .select(col("n").as("id"), coalesce(col("c"), col("n")).as("cluster_id"))
+      // (count, checksum) fingerprint of the materialized edge set — the
+      // convergence test, folded into the one action that caches it.
+      def fingerprint(e: DataFrame): (Long, Long) = {
+        // bit_xor, not sum: ANSI mode faults on wrap-around, and XOR over
+        // the (distinct) edge hashes is order-independent by construction.
+        val r = e.agg(count(lit(1)),
+          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).first()
+        (r.getLong(0), r.getLong(1))
+      }
+      // Canonical edges u < v; a self-pair or a NULL id links nothing.
+      var edges = pairs.select(least(a, b).as("u"), greatest(a, b).as("v"))
+        .where(col("u") =!= col("v")).distinct().persist()
+      var terminal = false
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      try {
+        var fp = fingerprint(edges)
+        // Scale-adaptive loop partitioning: every exchange inside the
+        // contraction is an EXPLICIT repartition to `p` partitions, sized
+        // from the measured initial edge count (~4M edge rows ≈ 64–128 MB
+        // a partition), instead of the session's shuffle.partitions — a
+        // constant tuned for corpus-sized scans is 1-2 orders too wide for
+        // the edge set, and the loop pays it per exchange per round
+        // (32-task stages over a few thousand rows dominated d42's wall:
+        // 2,966 tasks / 139 s summed task time for 2 MB of shuffle). The
+        // explicit repartition also lets the min-aggregate and the
+        // re-point join SHARE one exchange per phase (both need hash(u));
+        // the implicit plan shuffled `sym` twice.
+        val p = loopPartitions(fp._1, spark.sparkContext.defaultParallelism)
+        // One phase: for every node, m = min(neighborhood ∪ self); re-point
+        // the selected side of each neighborhood at m. `keepLarger` selects
+        // large-star (strictly larger neighbors) vs small-star (the rest,
+        // including the node itself unless it IS the min).
+        def phase(e: DataFrame, keepLarger: Boolean): DataFrame = {
+          val sym = e.select(col("u"), col("v"))
+            .unionByName(e.select(col("v").as("u"), col("u").as("v")))
+            .repartition(p, col("u"))
+          val m = sym.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
+          // SHUFFLE_HASH, not broadcast and not sort-merge: both sides hang
+          // off sym's one explicit hash(u, p) exchange, so the equi-join is
+          // exchange-free; a broadcast build would add a per-phase broadcast
+          // JOB (driver round-trip — the loop's wall is scheduling latency),
+          // and the AQE-off default (sort-merge) would sort both sides per
+          // phase. The build side (m, one row per live node) always fits: it
+          // shrinks with the contraction and `p` grows with the edge count.
+          val joined = sym.join(m.hint("SHUFFLE_HASH"), "u")
+          val out =
+            if (keepLarger)
+              // large-star(u): {(m, w) : w ∈ Γ(u), w > u}; m ≤ u < w keeps
+              // the (u, v) canonical orientation for free
+              joined.where(col("v") > col("u"))
+                .select(col("m").as("u"), col("v"))
+            else
+              // small-star(u): {(m, w) : w ∈ Γ(u), w ≤ u} ∪ {(m, u)}
+              joined.where(col("v") < col("u"))
+                .select(col("m").as("u"), col("v"))
+                .unionByName(m.select(col("m").as("u"), col("u").as("v")))
+          out.where(col("u") =!= col("v"))
+            .repartition(p, col("u"), col("v")).distinct()
+        }
+        // AQE OFF for the loop body (restored in the finally): with every
+        // exchange explicitly repartitioned to `p` there is nothing for AQE
+        // to adapt, but its stage-by-stage execution turns each round's ~5
+        // exchanges into separate stage-materialization JOBS with a driver
+        // round-trip between them — measured at sf0.1 on d42, the loop ran
+        // 133 jobs for ~7 rounds of 2 MB frames, pure scheduling latency
+        // (8.5 s wall on 0.9 s of task time). With AQE off each round is ONE
+        // job whose stages pipeline inside the scheduler. Skew: per-key
+        // multiplicity in the contracted edge set is bounded (a hub key's
+        // edges collapse into one star after its first round), and `p` keeps
+        // partitions at ~32k rows minimum, so AQE's skew splitting has
+        // nothing to do here either. The conf is session-scoped: the loop is
+        // synchronous and the flag is restored before the (lazily planned)
+        // output join, so only the loop's own internal actions plan with it
+        // off.
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        var iter = 0
+        var converged = false
+        while (!converged && fp._1 > bound && iter < maxIter) {
+          // The large-star half is persisted for the round: small-star's
+          // min-aggregate and re-point join both read it.
+          val ls = phase(edges, keepLarger = true).persist()
+          val prev = edges
+          // localCheckpoint EVERY round: each phase references its input ~4×
+          // (sym union + min agg + re-point join), so the uncut logical plan
+          // grows ~16× per round and OOMs the driver on plan stringification
+          // by round 4. The checkpoint is LAZY (eager = false): the logical
+          // plan is truncated immediately either way, and the convergence
+          // fingerprint right below is the round's single action — it
+          // computes the round's edges, local-checkpoints them as a side
+          // effect (the block-manager cache IS the local checkpoint), and
+          // aggregates them in ONE job. The eager form paid a second,
+          // near-identical job per round just to materialize before
+          // aggregating.
+          edges = phase(ls, keepLarger = false).localCheckpoint(false)
+          try {
+            val nfp = fingerprint(edges)
+            converged = nfp == fp
+            fp = nfp
+          } finally { release(ls); release(prev) }
+          iter += 1
+        }
+        if (fp._1 <= bound) (joinBack(labelTable(edges.collect(), "v", "u")), iter)
+        else if (converged) { terminal = true; (joinBack(edges), iter) }
+        else throw new IllegalStateException(
+          s"duplicateClustersStar did not converge within maxIter=$maxIter rounds; raise maxIter")
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        // a converged star set over the bound is the returned plan's input
+        if (!terminal) release(edges)
+      }
     }
-    var iter = 0
-    var converged = false
-    // AQE OFF for the loop body (restored in the finally): with every
-    // exchange explicitly repartitioned to `p` there is nothing for AQE
-    // to adapt, but its stage-by-stage execution turns each round's ~5
-    // exchanges into separate stage-materialization JOBS with a driver
-    // round-trip between them — measured at sf0.1 on d42, the loop ran
-    // 133 jobs for ~7 rounds of 2 MB frames, pure scheduling latency
-    // (8.5 s wall on 0.9 s of task time). With AQE off each round is ONE
-    // job whose stages pipeline inside the scheduler. Skew: per-key
-    // multiplicity in the contracted edge set is bounded (a hub key's
-    // edges collapse into one star after its first round), and `p` keeps
-    // partitions at ~32k rows minimum, so AQE's skew splitting has
-    // nothing to do here either. The conf is session-scoped: the loop is
-    // synchronous and the flag is restored before the (lazily planned)
-    // output join below, so only the loop's own internal actions plan
-    // with it off.
-    val sess = pairs.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-    while (!converged && iter < maxIter) {
-      // The large-star half is persisted for the round: small-star's
-      // min-aggregate and re-point join both read it.
-      val ls = phase(edges, keepLarger = true).persist()
-      // localCheckpoint EVERY round, not every 5 like the propagation
-      // path: each phase references its input ~4× (sym union + min agg +
-      // re-point join), so the uncut logical plan grows ~16× per round
-      // and OOMs the driver on plan stringification by round 4. The
-      // checkpoint is LAZY (eager = false): the logical plan is truncated
-      // immediately either way, and the convergence fingerprint right
-      // below is the round's single action — it computes the round's
-      // edges, local-checkpoints them as a side effect (the block-manager
-      // cache IS the local checkpoint), and aggregates them in ONE job.
-      // The eager form paid a second, near-identical job per round just
-      // to materialize before aggregating; on the small per-round frames
-      // the loop's wall is job-scheduling latency (labels and round
-      // counts are identical either way).
-      val mat = phase(ls, keepLarger = false).localCheckpoint(false)
-      val nfp = fingerprint(mat)
-      converged = nfp == fp
-      ls.unpersist()
-      edges.unpersist()
-      edges = mat
-      fp = nfp
-      iter += 1
+  }
+
+  /** Drops a frame's cached blocks, and its checkpoint's blocks when the
+    * frame is a local checkpoint (whose Dataset `unpersist` leaves them).
+    */
+  private def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
-    } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    if (!converged) {
-      throw new IllegalStateException(
-        s"duplicateClustersStar did not converge within maxIter=$maxIter rounds; raise maxIter")
+  }
+
+  /** Union-find over pairs (u, v) of integral ids: maps every id to the
+    * minimum id of its component. A pair with a NULL side adds its ids
+    * as nodes and links nothing.
+    */
+  private def unionFind(rows: Array[Row]): Array[Row] = {
+    val parent = mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val up = parent(c); parent(c) = r; c = up }
+      r
     }
-    lastConvergenceRounds = iter
-    // Terminal state is one star per component rooted at its min: every
-    // non-root appears exactly once as v. Roots label themselves.
-    val out = nodes
-      .join(edges.select(col("v").as("n"), col("u").as("c")), Seq("n"), "left")
-      .select(col("n").as("id"), coalesce(col("c"), col("n")).as("cluster_id"))
-    edges.unpersist()
-    nodes.unpersist()
-    out
+    def key(x: Any): Long = x.asInstanceOf[Number].longValue
+    for (row <- rows) {
+      val (u, v) = (row.get(0), row.get(1))
+      parent.getOrElseUpdate(u, u)
+      parent.getOrElseUpdate(v, v)
+      if (u != null && v != null) {
+        val (ru, rv) = (find(u), find(v))
+        if (key(ru) < key(rv)) parent(rv) = ru
+        else if (key(rv) < key(ru)) parent(ru) = rv
+      }
+    }
+    parent.keys.toArray.map(n => Row(n, find(n)))
   }
 
   /** Approximate row count for sizing heuristics (the stop-shingle cut),

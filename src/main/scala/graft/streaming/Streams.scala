@@ -220,7 +220,7 @@ object Streams {
     // pairs are (id1 < id2): dropping every id2 keeps a doc iff it has
     // no kept near-dup with a smaller id (the greedy keep-first rule;
     // for full transitive-cluster canonicalization compose with
-    // Dedup.duplicateClusters instead)
+    // Dedup.duplicateClustersStar instead)
     val dups = pairs.select(col("id2").as("__self_dup")).distinct()
     val selfDeduped = batch.join(dups, batch(idCol) === col("__self_dup"), "left_anti")
     index.filterNovel(selfDeduped, idCol, textCol, threshold)

@@ -67,7 +67,7 @@ object CorpusOps {
     * near-identical crawls of one page can straddle the train/test
     * boundary). Here the split is decided by the document's duplicate-
     * CLUSTER id (connected components over the near-dup pair graph,
-    * [[graft.dedup.Dedup.duplicateClusters]]), so an entire component
+    * [[graft.dedup.Dedup.duplicateClustersStar]]), so an entire component
     * co-travels; documents in no cluster split by their own id —
     * which IS their singleton component's canonical (min) label, so
     * the rule is uniformly "split by component label".
@@ -77,17 +77,17 @@ object CorpusOps {
     * across re-runs, partitioning and engines.
     *
     * Scale shape: the pair graph is dup-graph-sized (the MinHash-LSH
-    * output, never corpus²); CC is the log-diameter label-propagation
-    * loop; the label table joins back to the corpus on the id — ONE
-    * equi-join (AQE broadcasts when the dup graph is small), then the
-    * split is the usual pure column expression. The unclustered
-    * majority takes the NULL side of the left join and never shuffles
-    * into the CC loop.
+    * output, never corpus²); CC labels a small graph on the driver and
+    * contracts a large one in O(log n) star rounds; the label table
+    * joins back to the corpus on the id — ONE equi-join (a broadcast
+    * when the dup graph is small), then the split is the usual pure
+    * column expression. The unclustered majority takes the NULL side of
+    * the left join and never shuffles into the CC loop.
     */
   def leakageSafeSplit(df: DataFrame, pairs: DataFrame, idCol: String,
                        weights: Seq[(String, Double)],
                        id1: String = "id1", id2: String = "id2"): DataFrame = {
-    val cc = graft.dedup.Dedup.duplicateClusters(pairs, id1, id2)
+    val cc = graft.dedup.Dedup.duplicateClustersStar(pairs, id1, id2)
       .select(col("id").as("__cc_id"), col("cluster_id").as("__cc_label"))
     df.join(cc, df(idCol) === col("__cc_id"), "left")
       .withColumn("split",

@@ -207,52 +207,96 @@ class DedupSpec extends SparkSpec {
     assert(kept.head.schema.fieldNames.toSeq == Seq("doc_id", "text"))
   }
 
-  test("duplicateClusters labels components with their minimum id") {
+  /** Collected (id, cluster_id) rows of a labels frame, NULL ids as None. */
+  private def ccLabels(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], Option[Long])] =
+    df.collect().toSeq.map(r => (Option(r.get(0)).map(_.toString.toLong),
+      Option(r.get(1)).map(_.toString.toLong)))
+
+  /** Ids of the RDDs the session holds persisted or local-checkpointed. */
+  private def heldRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("duplicateClustersStar labels components with their minimum id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 7L)).toDF("id1", "id2")
-    val comp = Dedup.duplicateClusters(pairs).collect()
+    val comp = Dedup.duplicateClustersStar(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp(1L) == 1L && comp(2L) == 1L && comp(3L) == 1L && comp(7L) == 1L)
     assert(comp(5L) == 5L && comp(6L) == 5L)
+    // int ids keep their type on the driver finish, as on the rounds
+    val ints = pairs.select(col("id1").cast("int").as("id1"), col("id2").cast("int").as("id2"))
+    val (intRounds, _) = Dedup.contractComponents(ints, "id1", "id2", 30, 0)
+    assert(Dedup.duplicateClustersStar(ints).schema == intRounds.schema)
+    assert(ccLabels(Dedup.duplicateClustersStar(ints)).toSet == ccLabels(intRounds).toSet)
+    // string ids have no driver finish: they run the rounds to the same labels
+    val strs = pairs.select(col("id1").cast("string").as("id1"), col("id2").cast("string").as("id2"))
+    assert(ccLabels(Dedup.duplicateClustersStar(strs)).toSet ==
+      comp.map { case (i, c) => (Some(i), Some(c)) }.toSet)
   }
 
-  test("duplicateClusters converges in O(log diameter) rounds on a chain graph") {
+  test("duplicateClustersStar matches a driver BFS labelling on every path") {
+    // reference: breadth-first search over the pairs on the driver; every
+    // id is a node, a NULL id is its own NULL-labelled node, and only a
+    // pair of two ids links anything
+    def bfs(pairs: Seq[(Option[Long], Option[Long])]): Map[Option[Long], Option[Long]] = {
+      val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val adj = pairs.collect { case (Some(a), Some(b)) => Seq(a -> b, b -> a) }.flatten
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      for (Some(start) <- nodes.sortBy(_.getOrElse(Long.MinValue)) if !label.contains(start)) {
+        val queue = scala.collection.mutable.Queue(start)
+        label(start) = start // ascending starts: the first node met is the min
+        while (queue.nonEmpty)
+          adj.getOrElse(queue.dequeue(), Nil).foreach { w =>
+            if (!label.contains(w)) { label(w) = start; queue.enqueue(w) }
+          }
+      }
+      nodes.map(n => n -> n.map(label)).toMap
+    }
+    val rnd = new scala.util.Random(20261020L)
+    val random = (1 to 4).map { _ =>
+      val edges = Seq.fill(40)((rnd.nextInt(24).toLong, rnd.nextInt(24).toLong))
+      // self-pairs and repeats in both orientations ride along
+      val extra = edges.take(5).map(_.swap) ++ edges.take(3) ++
+        Seq.fill(3)(rnd.nextInt(24).toLong).map(i => (i, i))
+      (edges ++ extra).map { case (a, b) => (Option(a), Option(b)) }
+    }
+    val nulls = Seq((Some(1L), None), (None, Some(2L)), (Some(2L), Some(3L)),
+      (Some(4L), Some(4L)), (Some(3L), Some(1L)))
+    for (graph <- random ++ Seq(nulls, Nil)) {
+      val pairs = graph.toDF("id1", "id2")
+      val want = bfs(graph)
+      def check(path: String, got: Seq[(Option[Long], Option[Long])]): Unit = {
+        assert(got.size == want.size, s"$path: ${got.size} rows for ${want.size} ids")
+        assert(got.toMap == want, s"$path labels differ on $graph")
+      }
+      check("driver finish", ccLabels(Dedup.duplicateClustersStar(pairs)))
+      check("distributed rounds", ccLabels(Dedup.contractComponents(pairs, "id1", "id2", 30, 0)._1))
+      // a row bound of the converged star's size: the rounds run until the
+      // edge set fits it, then the driver finishes, holding nothing back
+      val linked = graph.collect { case (Some(a), Some(b)) if a != b => Seq(a, b) }
+      val linkedIds = linked.flatten.distinct
+      val starRows = linkedIds.size - linkedIds.map(i => want(Some(i))).distinct.size
+      val held = heldRdds()
+      val (mixed, rounds) = Dedup.contractComponents(pairs, "id1", "id2", 30, starRows)
+      check("rounds then driver finish", ccLabels(mixed))
+      assert((heldRdds() -- held).isEmpty, s"the driver finish left RDDs persisted on $graph")
+      if (linked.map(_.sorted).distinct.size > starRows)
+        assert(rounds >= 1, s"a graph over its row bound ran no round: $graph")
+    }
+  }
+
+  test("contraction rounds converge in O(log diameter) on a chain graph") {
     // worst case for plain label propagation: a 64-node path needs ~62
-    // rounds without pointer jumping. With path halving the collapsed
-    // distance doubles per round, so 2*log2(64) = 12 rounds must suffice
-    // (maxIter = 14 would throw under the old linear behaviour).
+    // rounds. The alternating large/small-star contraction halves the
+    // distances, so 2*log2(64) = 12 rounds must suffice (row bound 0: no
+    // driver finish, every round distributed)
     val path = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val comp = Dedup.duplicateClusters(path, maxIter = 14).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (labels, rounds) = Dedup.contractComponents(path, "id1", "id2", 14, 0)
+    val comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size == 64 && comp.values.forall(_ == 0L))
-    assert(Dedup.lastConvergenceRounds <= 12,
-      s"expected <= 2*log2(64) rounds, used ${Dedup.lastConvergenceRounds}")
-  }
-
-  test("duplicateClustersStar matches propagation labels and bounds chain-graph rounds") {
-    // equivalence on a mixed graph: two components, a hub, a singleton
-    // self-pair, and ids arriving in both orientations
-    val pairs = Seq((2L, 1L), (2L, 3L), (5L, 6L), (7L, 3L), (9L, 9L),
-      (10L, 11L), (11L, 12L), (12L, 10L)).toDF("id1", "id2")
-    val star = Dedup.duplicateClustersStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.duplicateClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == prop, s"star $star != propagation $prop")
-    assert(star(7L) == 1L && star(9L) == 9L && star(12L) == 10L)
-
-    // the pathological shape the variant exists for: a 64-node chain
-    // converges in O(log n) alternating rounds, and the labels agree
-    // with the propagation path
-    val path = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val comp = Dedup.duplicateClustersStar(path, maxIter = 14).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp.size == 64 && comp.values.forall(_ == 0L))
-    assert(Dedup.lastConvergenceRounds <= 12,
-      s"expected <= 2*log2(64) star rounds, used ${Dedup.lastConvergenceRounds}")
-
+    assert(rounds <= 12, s"expected <= 2*log2(64) star rounds, used $rounds")
     // partial labels are never returned silently
     intercept[IllegalStateException] {
-      Dedup.duplicateClustersStar(path, maxIter = 2)
+      Dedup.contractComponents(path, "id1", "id2", 2, 0)
     }
   }
 
@@ -268,8 +312,8 @@ class DedupSpec extends SparkSpec {
     val hubs = giant.map(g => (g, g - g % 300)).filter { case (a, b) => a != b }
     val background = (1L until n - 3 by 30).map(i => (i, i + 3))
     val pairs = (chain ++ hubs ++ background).toDF("id1", "id2")
-    val labels = Dedup.duplicateClustersStar(pairs, maxIter = 14).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (cc, rounds) = Dedup.contractComponents(pairs, "id1", "id2", 14, 0)
+    val labels = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every giant node collapses to the global min; the giant holds
     // >= 30% of all ids; small components stay separate beside it
     assert(giant.forall(g => labels(g) == 0L),
@@ -283,8 +327,7 @@ class DedupSpec extends SparkSpec {
     // large/small-star contraction must stay logarithmic, not walk the
     // chain; 10 rounds is ~2x the measured count (5), far under the
     // linear regime
-    assert(Dedup.lastConvergenceRounds <= 10,
-      s"expected O(log diameter) rounds on the hubbed giant, used ${Dedup.lastConvergenceRounds}")
+    assert(rounds <= 10, s"expected O(log diameter) rounds on the hubbed giant, used $rounds")
   }
 
   test("loopPartitions sizes the CC loops' exchanges from the measured edge count") {
@@ -301,17 +344,69 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.loopPartitions(1000000000000L, 32) == 250000)
   }
 
-  test("duplicateClusters throws instead of returning partial labels at maxIter") {
-    // a path graph 0-1-2-...-9 needs ~8 propagation rounds to pull the
-    // far end down to label 0; maxIter=3 must fail loudly, not silently
+  test("contraction rounds throw instead of returning partial labels at maxIter") {
+    // a path graph 0-1-2-...-9 takes more than 3 contraction rounds to
+    // pull the far end down to label 0; maxIter=3 must fail loudly, not
+    // silently (row bound 0: every round distributed)
     val path = (0L until 9L).map(i => (i, i + 1)).toDF("id1", "id2")
     intercept[IllegalStateException] {
-      Dedup.duplicateClusters(path, maxIter = 3)
+      Dedup.contractComponents(path, "id1", "id2", 3, 0)
     }
     // and with enough rounds the same graph fully converges to one label
-    val ok = Dedup.duplicateClusters(path, maxIter = 20).collect()
+    val ok = Dedup.contractComponents(path, "id1", "id2", 20, 0)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ok.values.toSet == Set(0L) && ok.size == 10)
+  }
+
+  test("contraction releases its cached and checkpointed frames on every exit") {
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = heldRdds()
+    intercept[IllegalStateException] {
+      Dedup.contractComponents(path, "id1", "id2", 2, 0)
+    }
+    assert((heldRdds() -- before).isEmpty,
+      s"a non-converging contraction left RDDs ${heldRdds() -- before} persisted")
+    // a 12-clique's 66 edges contract to an 11-edge star in one round,
+    // which fits a row bound of 11: the driver finishes and nothing stays held
+    val clique = for (i <- 0L until 12L; j <- i + 1 until 12L) yield (i, j)
+    val (labels, rounds) = Dedup.contractComponents(clique.toDF("id1", "id2"), "id1", "id2", 30, 11)
+    assert(rounds >= 1 && labels.collect().map(_.getLong(1)).toSet == Set(0L))
+    assert((heldRdds() -- before).isEmpty,
+      s"a driver-finished contraction left RDDs ${heldRdds() -- before} persisted")
+  }
+
+  test("duplicateClustersStar labels a small graph within its job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // store-fed pairs, as the d15 family reads them: one parquet file
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-budget").toString
+    Seq((2L, 1L), (2L, 3L), (5L, 6L), (7L, 3L), (9L, 9L), (10L, 11L), (11L, 12L), (12L, 10L))
+      .toDF("id1", "id2").coalesce(1).write.mode("overwrite").parquet(dir)
+    val pairs = spark.read.parquet(dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        Option(s.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cc-budget-spec") => jobs.incrementAndGet()
+          case Some("cc-budget-sentinel") => sentinel.countDown()
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("cc-budget-spec", "connected components job budget")
+      val labels = Dedup.duplicateClustersStar(pairs).collect()
+      // RDD sentinel job in its own group: the listener bus is FIFO, so
+      // once its start has arrived every job of the operator has been counted
+      spark.sparkContext.setJobGroup("cc-budget-sentinel", "job budget sentinel")
+      spark.sparkContext.parallelize(Seq(1)).count()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(labels.length == 10)
+      assert(jobs.get() == 1, s"connected components of an 8-pair graph ran ${jobs.get()} jobs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("approxRowCount estimates without a full corpus pass, exact-count fallback on tiny input") {
