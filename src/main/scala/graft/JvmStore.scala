@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** The per-JVM artifact store: build once, serve many. A store is a
   * scratch directory that `write` fills once per JVM per (prefix, key)
   * and every later call reads by path — a constant sample slice, a
@@ -67,5 +70,22 @@ object JvmStore {
     val slot = slots.computeIfAbsent((prefix, key), _ => new Slot(prefix, write))
     try slot.path
     catch { case e: Throwable => slots.remove((prefix, key), slot); throw e }
+  }
+
+  private val schemas = new ConcurrentHashMap[(String, String), StructType]()
+
+  /** A parquet store of the frame `build` returns, written once per JVM
+    * (partitioned by `partitionBy`, if any) and read back by `s` with the
+    * schema the build read off the written files. A bare parquet read
+    * infers that schema again on every call, which costs a Spark job per
+    * read; a read given the schema runs none and plans the same scan.
+    */
+  def frame(s: SparkSession, prefix: String, key: String, partitionBy: String*)(
+      build: => DataFrame): DataFrame = {
+    val path = apply(prefix, key) { tmp =>
+      build.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(tmp)
+      schemas.put((prefix, key), s.read.parquet(tmp).schema)
+    }
+    s.read.schema(schemas.get((prefix, key))).parquet(path)
   }
 }

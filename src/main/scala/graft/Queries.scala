@@ -86,14 +86,13 @@ object Queries {
     */
   private def sampleTable(s: SparkSession, dir: String, table: String,
       key: String)(pred: org.apache.spark.sql.Column): DataFrame = {
-    val path = JvmStore("graft-sample", s"$dir#$table#$key") { tmp =>
-      Tpch.table(s, dir, table).where(pred).write.mode("overwrite").parquet(tmp)
-    }
     // The read-back is BARE: most consumers are light scoring passes
     // where a fill-the-cores exchange measured as a net loss (see the
     // docs/docsWide comment) — the one heavy consumer (d52s's Gopher
     // battery) wraps its slice in Tpch.fillCores at the call site.
-    s.read.parquet(path)
+    JvmStore.frame(s, "graft-sample", s"$dir#$table#$key") {
+      Tpch.table(s, dir, table).where(pred)
+    }
   }
 
   /** The 'en' n-gram LM ladder, exactly
@@ -107,7 +106,7 @@ object Queries {
     * shape (ctx = "" at n = 1).
     */
   private def lmTier(s: SparkSession, dir: String, n: Int): DataFrame = {
-    val path = JvmStore("graft-lm", dir) { tmp =>
+    val ladder = JvmStore.frame(s, "graft-lm", dir, "n") {
       val lms = graft.text.CorpusOps.ngramLms(
         docsWide(s, dir).where(col("lang") === "en"), "text", 5, minN = 1)
       // ctx totals DENORMALIZED onto every row at build time: the
@@ -117,9 +116,8 @@ object Queries {
       lms.join(lms.groupBy(col("n"), col("ctx"))
             .agg(sum(col("ngram_count")).as("ctx_total")),
           Seq("n", "ctx"))
-        .write.mode("overwrite").partitionBy("n").parquet(tmp)
     }
-    s.read.parquet(path).where(col("n") === n)
+    ladder.where(col("n") === n)
       .select(col("ctx"), col("token"), col("ngram_count"), col("ctx_total"))
   }
 
@@ -158,17 +156,15 @@ object Queries {
     * documents table (DedupSpec pins store-fed == direct-call).
     */
   private def dedupArtifacts(s: SparkSession, dir: String): DataFrame = {
-    val path = JvmStore("graft-mh", dir) { tmp =>
-      graft.dedup.Dedup.minhashArtifacts(docsWide(s, dir), "doc_id", "text",
-          k = 3, numHashes = 32)
-        .write.mode("overwrite").parquet(tmp)
-    }
     // BARE read-back: banding + verification above this scan are light
     // enough that the fill-the-cores exchange measured as a small net
     // loss across all five LSH consumers (interleaved on/off minima:
     // d03 -0.13, d15 -0.15, d34 -0.17, t17 -0.23, d30 +0.16 noise) —
     // see the docs/docsWide comment for the per-gate fill policy.
-    s.read.parquet(path)
+    JvmStore.frame(s, "graft-mh", dir) {
+      graft.dedup.Dedup.minhashArtifacts(docsWide(s, dir), "doc_id", "text",
+        k = 3, numHashes = 32)
+    }
   }
 
   /** The store-fed MinHash-LSH pair set at the gate parameters — the
@@ -187,14 +183,12 @@ object Queries {
     * DuckDB against the base table.
     */
   private def dedupShinglePairs(s: SparkSession, dir: String): DataFrame = {
-    val path = JvmStore("graft-shpairs", dir) { tmp =>
+    JvmStore.frame(s, "graft-shpairs", dir) {
       val art = dedupArtifacts(s, dir)
       graft.dedup.Dedup.shinglePairsFromArtifacts(art,
-          nDocs = graft.dedup.Dedup.approxRowCount(art),
-          minCoeff = 0.5, stopShingleFraction = 0.1)
-        .write.mode("overwrite").parquet(tmp)
+        nDocs = graft.dedup.Dedup.approxRowCount(art),
+        minCoeff = 0.5, stopShingleFraction = 0.1)
     }
-    s.read.parquet(path)
   }
 
   /** The d52 oracle SQL — the full Gopher Table-A1 replay — factored

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * volume is numTables·f²/2 pairs whatever the threshold, and a
   * 20000-row cluster's dormant side is exactly the multi-hour
   * straggler the salt prevents; the machinery exercised is identical
-  * (same detection probe, same gridSaltedSides join, same verdict
+  * (same detection probe, same bandSelfJoin, same verdict
   * cache).
   *
   *   runMain graft.SkewProbe [clusterSize] [skewedBucketFreq]

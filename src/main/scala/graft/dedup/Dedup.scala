@@ -35,11 +35,8 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.5,
                         stopShingleFraction: Double = 1.0): DataFrame =
-    shingleIntersections(df, idCol, textCol, k, stopShingleFraction)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
+    ngramJaccardPairsFromArtifacts(
+      shingleIntersections(df, idCol, textCol, k, stopShingleFraction), threshold)
 
   /** Shared inverted-index core of the exact-shingle pair family: one row
     * per unordered candidate pair (id1 < id2) with the per-doc shingle
@@ -68,10 +65,21 @@ object Dedup {
     * [[containmentPairsFromArtifacts]]).
     */
   def shinglePostings(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = 3): DataFrame =
-    df.select(col(idCol).as("id"), shingleSet(col(textCol), k).as("shingles"))
-      .select(col("id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh0"))
-      .select(col("id"), col("sz"), xxhash64(col("sh0")).as("sh"))
+                      k: Int = 3): DataFrame = {
+    val docs = df.select(col(idCol).as("id"), shingleSet(col(textCol), k).as("shingles"))
+    shingleHashes(docs, col("shingles"), "sh")(col("id"), size(col("shingles")).as("sz"))
+  }
+
+  /** One row per (input row, element of the shingle array `shingles`):
+    * the `keep` columns, evaluated against `df`, and the shingle's
+    * 64-bit hash as `hashAs` — the hashed-shingle rows every
+    * inverted-index join of this family meets on.
+    */
+  private def shingleHashes(df: DataFrame, shingles: Column, hashAs: String)(
+      keep: Column*): DataFrame = {
+    val exploded = df.select(keep :+ explode(shingles).as("sh0"): _*)
+    exploded.select(exploded.columns.init.map(col) :+ xxhash64(col("sh0")).as(hashAs): _*)
+  }
 
   /** The inverted-index pair core over prebuilt postings (the
     * [[shinglePostings]] shape) — the DIRECT from-text form. The scale
@@ -106,6 +114,14 @@ object Dedup {
         val sz2 = kept.groupBy("id").agg(count(lit(1)).as("sz2"))
         kept.join(sz2, "id").withColumnRenamed("sz2", "sz")
       }
+    postingPairCounts(sh)
+  }
+
+  /** The postings self-join-and-count under both exact-shingle pair
+    * cores: (id, sz, sh) postings in, one row per unordered pair
+    * sharing a shingle out, as (id1 < id2, sz1, sz2, inter).
+    */
+  private def postingPairCounts(sh: DataFrame): DataFrame = {
     val a = sh.alias("a"); val b = sh.alias("b")
     a.join(b, col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -114,8 +130,9 @@ object Dedup {
   }
 
   /** [[ngramJaccardPairs]] over a prebuilt [[shinglePairsFromArtifacts]]
-    * table — identical pair set to the direct from-text call
-    * (spec-pinned in both cut regimes), priced as a per-row projection:
+    * table — the projection the direct from-text call runs over its own
+    * pair core (store-fed == direct is spec-pinned in both cut regimes),
+    * priced as a per-row projection:
     * J = inter/(sz1+sz2-inter), exact rational threshold compare, THEN
     * 6dp rounding. Requires `threshold >= the pair table's minCoeff`
     * (J <= max-containment, so nothing a valid caller needs was
@@ -131,8 +148,9 @@ object Dedup {
 
   /** [[containmentPairs]] over a prebuilt [[shinglePairsFromArtifacts]]
     * table — both directions projected from the single unordered-pair
-    * row, exactly like the direct form. Requires `threshold >= the pair
-    * table's minCoeff` (each direction's C <= max-containment).
+    * row; the direct form runs this projection over its own pair core.
+    * Requires `threshold >= the pair table's minCoeff` (each direction's
+    * C <= max-containment).
     */
   def containmentPairsFromArtifacts(pairs: DataFrame,
                                     threshold: Double = 0.5): DataFrame = {
@@ -167,17 +185,9 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 3, threshold: Double = 0.5,
-                       stopShingleFraction: Double = 1.0): DataFrame = {
-    val pairs = shingleIntersections(df, idCol, textCol, k, stopShingleFraction)
-    val fwd = pairs.select(col("id1").as("id"), col("id2").as("container_id"),
-      (col("inter").cast("double") / col("sz1")).as("containment"))
-    val rev = pairs.select(col("id2").as("id"), col("id1").as("container_id"),
-      (col("inter").cast("double") / col("sz2")).as("containment"))
-    fwd.union(rev)
-      .where(col("containment") >= threshold)
-      .select(col("id"), col("container_id"),
-        round(col("containment"), 6).as("containment"))
-  }
+                       stopShingleFraction: Double = 1.0): DataFrame =
+    containmentPairsFromArtifacts(
+      shingleIntersections(df, idCol, textCol, k, stopShingleFraction), threshold)
 
   /** Materialize the deduplicated corpus: keep exactly one row (the
     * minimum-id document) per distinct content fingerprint, preserving
@@ -497,66 +507,13 @@ object Dedup {
     }
   }
 
-  /** Web-scale entry point for n-gram Jaccard near-dup: identical
-    * operator, but the stop-shingle cut is ON by default. At corpus scale
-    * a shingle shared by a large fraction of documents produces quadratic
-    * join fanout while carrying no near-dup signal — one hot shingle in
-    * 1% of 10⁹ docs is 10¹⁴ candidate pairs. The exact variant
-    * (ngramJaccardPairs, cut off) remains the oracle/test mode.
-    */
-  def ngramJaccardPairsAtScale(df: DataFrame, idCol: String, textCol: String,
-                               k: Int = 3, threshold: Double = 0.5,
-                               stopShingleFraction: Double = 0.1): DataFrame =
-    ngramJaccardPairs(df, idCol, textCol, k, threshold, stopShingleFraction)
-
   /** MinHash signature: sig(j) = min over shingles of xxhash64(shingle,
     * seed=j). Native codegen'd expression (graft.functions.MinHashSig).
     */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     graft.functions.VectorFunctions.minhash(shingles, numHashes)
 
-  /** Adaptive 2-D grid salt for a banded SELF-join — the
-    * [[graft.ops.Relational.fuzzyJoin]] grid convention applied to
-    * dedup band buckets: per-bucket frequency is measured (one slim
-    * aggregation; only buckets PAST `hotFreq` survive into the
-    * broadcast, so the fan table is bounded by n/hotFreq entries), each
-    * hot bucket splits both join sides into `fan = ⌈freq/hotFreq⌉`
-    * id-hash cells (capped at `saltFan`) while replicating `fan` ways
-    * across the other side's cells, and every (a, b) pair meets exactly
-    * once at cell (h(a), h(b)). Per-task input stays ≈ `hotFreq` banded
-    * rows no matter how hot a bucket gets — the adversarial corpus
-    * where one band bucket concentrates (all-near-identical docs, or a
-    * constant dHash) becomes a fan²-cell grid instead of one quadratic
-    * straggler task. Cold buckets (the entire corpus in the benign
-    * case) take fan 1: a plain join row, no replication. The same
-    * shuffle-volume trade as fuzzyJoin's grid applies: a hot bucket's
-    * rows replicate up to `saltFan`× per side — bounded balance bought
-    * with bounded duplication.
-    *
-    * Returns the two sides to equi-join on `keyCols ++ (__salt,
-    * __rsalt)`; callers keep their own pair predicates (id ordering,
-    * first-agreeing-table, verify-inline).
-    *
-    * BENIGN-CASE COST: the hot-bucket DETECTION runs on `probeBanded` —
-    * the caller's banding of a deterministic ~1/probeMod id-hash sample
-    * of the input (see [[gridProbeMod]]: probeMod is sized so a bucket
-    * AT the threshold still yields ~10 expected sample hits, so a
-    * genuinely hot bucket is detected with overwhelming probability
-    * while the probe reads ~1.5% of the corpus). When no bucket is
-    * suspected — every real corpus at sane thresholds — both returned
-    * sides are the SAME plain frame with constant salts, so the
-    * self-join's two exchanges stay identical and Spark's
-    * ReusedExchange computes the banded subtree once: exactly the
-    * pre-grid plan, plus only the tiny probe job. Only a suspected hot
-    * bucket triggers the FULL frequency measure (fans derive from
-    * exact counts, never estimates) and the grid plan. A borderline
-    * bucket the sample misses (freq just past the threshold) costs at
-    * most a ~(2·hotFreq)²/2-pair task — bounded degradation, while the
-    * monster bucket the grid exists for (≫ threshold) cannot be
-    * missed; a false POSITIVE merely measures exactly and finds every
-    * fan = 1, a plain join with wider keys.
-    */
-  /** JVM-wide verdict cache for [[gridSaltedSides]]' hot-bucket probe,
+  /** JVM-wide verdict cache for [[bandSelfJoin]]'s hot-bucket probe,
     * keyed by the caller-supplied `verdictKey` plus the grid parameters
     * (the [[graft.JvmStore]] once-per-JVM convention). The probe is a real Spark
     * job at PLAN-CONSTRUCTION time — the one eager action in the band
@@ -594,11 +551,57 @@ object Dedup {
     ()
   }
 
-  private[graft] def gridSaltedSides(banded: DataFrame, probeBanded: DataFrame,
-                              probeMod: Int, idCol: String,
-                              keyCols: Seq[String], hotFreq: Long,
-                              saltFan: Int,
-                              verdictKey: String = ""): (DataFrame, DataFrame) = {
+  /** The banded SELF-join every LSH pair operator runs (MinHash bands,
+    * hamming tables, hyperplane buckets): `banded` joined to itself on
+    * `keyCols` under the aliases `a` and `b`, filtered by the caller's
+    * `pair` predicate over those aliases (id order, first agreeing
+    * table, an inline verify). Returns the joined frame; callers select
+    * their pair columns from `a.*` / `b.*`. Rows carry an `id` column.
+    *
+    * Hot buckets join through an adaptive 2-D grid salt — the
+    * [[graft.ops.Relational.fuzzyJoin]] grid convention applied to band
+    * buckets: per-bucket frequency is measured (one slim aggregation;
+    * only buckets PAST `hotFreq` survive into the broadcast, so the fan
+    * table is bounded by n/hotFreq entries), each hot bucket splits both
+    * join sides into `fan = ⌈freq/hotFreq⌉` id-hash cells (capped at
+    * `saltFan`) while replicating `fan` ways across the other side's
+    * cells, and every (a, b) pair meets exactly once at cell (h(a), h(b)).
+    * Per-task input stays ≈ `hotFreq` banded rows no matter how hot a
+    * bucket gets — the adversarial corpus where one band bucket
+    * concentrates (all-near-identical docs, or a constant dHash) becomes
+    * a fan²-cell grid instead of one quadratic straggler task. Cold
+    * buckets (the entire corpus in the benign case) take fan 1: a plain
+    * join row, no replication. The same shuffle-volume trade as
+    * fuzzyJoin's grid applies: a hot bucket's rows replicate up to
+    * `saltFan`× per side — bounded balance bought with bounded
+    * duplication. The salt columns never leave this function.
+    *
+    * BENIGN-CASE COST: the hot-bucket DETECTION runs on `probeBanded` —
+    * the caller's banding of a deterministic ~1/probeMod id-hash sample
+    * of the input (see [[gridProbeMod]]: probeMod is sized so a bucket
+    * AT the threshold still yields ~10 expected sample hits, so a
+    * genuinely hot bucket is detected with overwhelming probability
+    * while the probe reads ~1.5% of the corpus). When no bucket is
+    * suspected — every real corpus at sane thresholds — both join sides
+    * are the SAME plain frame with constant salts, so the self-join's
+    * two exchanges stay identical and Spark's ReusedExchange computes
+    * the banded subtree once: exactly the pre-grid plan, plus only the
+    * tiny probe job. Only a suspected hot bucket triggers the FULL
+    * frequency measure (fans derive from exact counts, never estimates)
+    * and the grid plan. A borderline bucket the sample misses (freq just
+    * past the threshold) costs at most a ~(2·hotFreq)²/2-pair task —
+    * bounded degradation, while the monster bucket the grid exists for
+    * (≫ threshold) cannot be missed; a false POSITIVE merely measures
+    * exactly and finds every fan = 1, a plain join with wider keys.
+    *
+    * The probe's verdict is cached in [[gridVerdicts]] under
+    * `verdictKey#verdictTag` when `verdictKey` is non-empty.
+    */
+  private[graft] def bandSelfJoin(banded: DataFrame, probeBanded: DataFrame,
+                                  probeMod: Int, keyCols: Seq[String],
+                                  hotFreq: Long, saltFan: Int,
+                                  verdictKey: String, verdictTag: String)(
+      pair: Column): DataFrame = {
     // probeMod = 1 means the probe IS the exact measure — trigger at the
     // threshold itself; a sampled probe triggers at half-threshold scaled
     // by the sampling rate (conservative: a false positive only measures)
@@ -611,33 +614,33 @@ object Dedup {
     val benign =
       if (verdictKey.isEmpty) probeIsBenign()
       else gridVerdicts.computeIfAbsent(
-        s"$verdictKey#${keyCols.mkString(",")}#$hotFreq#$saltFan#$probeMod",
+        s"$verdictKey#$verdictTag#${keyCols.mkString(",")}#$hotFreq#$saltFan#$probeMod",
         _ => probeIsBenign())
-    if (benign) {
-      val plain = banded.withColumn("__salt", lit(0L))
-        .withColumn("__rsalt", lit(0L))
-      return (plain, plain)
-    }
-    val hot = banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__bf")).where(col("__bf") > hotFreq)
-    val fanOf = least(
-      greatest(ceil(col("__bf").cast("double") / lit(hotFreq.toDouble))
-        .cast("long"), lit(1L)),
-      lit(saltFan.toLong))
-    val withFan = banded.join(broadcast(hot), keyCols, "left")
-      .withColumn("__fan", coalesce(fanOf, lit(1L))).drop("__bf")
-    val aSide = withFan
-      .withColumn("__salt", pmod(xxhash64(col(idCol)), col("__fan")))
-      .withColumn("__rsalt", explode(sequence(lit(0L), col("__fan") - 1)))
-      .drop("__fan")
-    val bSide = withFan
-      .withColumn("__rsalt", pmod(xxhash64(col(idCol)), col("__fan")))
-      .withColumn("__salt", explode(sequence(lit(0L), col("__fan") - 1)))
-      .drop("__fan")
-    (aSide, bSide)
+    val (aS, bS) =
+      if (benign) {
+        val plain = banded.withColumn("__salt", lit(0L))
+          .withColumn("__rsalt", lit(0L))
+        (plain, plain)
+      } else {
+        val hot = banded.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("__bf")).where(col("__bf") > hotFreq)
+        val fanOf = least(
+          greatest(ceil(col("__bf").cast("double") / lit(hotFreq.toDouble))
+            .cast("long"), lit(1L)),
+          lit(saltFan.toLong))
+        val withFan = banded.join(broadcast(hot), keyCols, "left")
+          .withColumn("__fan", coalesce(fanOf, lit(1L))).drop("__bf")
+        val cell = pmod(xxhash64(col("id")), col("__fan"))
+        val fanOut = explode(sequence(lit(0L), col("__fan") - 1))
+        (withFan.withColumn("__salt", cell).withColumn("__rsalt", fanOut).drop("__fan"),
+          withFan.withColumn("__rsalt", cell).withColumn("__salt", fanOut).drop("__fan"))
+      }
+    val a = aS.alias("a"); val b = bS.alias("b")
+    a.join(b, (keyCols :+ "__salt" :+ "__rsalt")
+      .map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) && pair)
   }
 
-  /** Probe sample modulus for [[gridSaltedSides]]: 1/probeMod of the
+  /** Probe sample modulus for [[bandSelfJoin]]: 1/probeMod of the
     * input ids (deterministic xxhash64 — repeatable plans), sized so a
     * bucket exactly AT `hotFreq` expects ≥ ~10 sample hits (never
     * undetectable), capped at 64 (≈1.5% — the probe's cost floor).
@@ -648,7 +651,7 @@ object Dedup {
   private[graft] def gridProbeMod(hotFreq: Long): Int =
     math.min(64L, math.max(1L, hotFreq / 10L)).toInt
 
-  /** The deterministic probe sample of `df` for [[gridSaltedSides]] —
+  /** The deterministic probe sample of `df` for [[bandSelfJoin]] —
     * filter BEFORE the expensive per-row map (shingling, media decode):
     * Catalyst pushes the id predicate below the projection, so the
     * probe evaluates the map for ~1/probeMod of the rows only.
@@ -665,7 +668,7 @@ object Dedup {
     * (band, bandHash) — tiny — and the verify join only touches
     * candidate ids. Hot band buckets (≥ `skewedBucketFreq` members —
     * the adversarial all-near-identical corpus) join through the
-    * measured 2-D grid salt ([[gridSaltedSides]]) so no single bucket
+    * measured 2-D grid salt ([[bandSelfJoin]]) so no single bucket
     * lands its f²/2 candidate pairs on one task.
     *
     * NOT a pure plan builder: the hot-bucket detection probe (a ~1.5%
@@ -683,49 +686,53 @@ object Dedup {
                       threshold: Double = 0.5,
                       skewedBucketFreq: Long = 20000L,
                       saltFan: Int = 64,
-                      verdictKey: String = ""): DataFrame = {
-    require(skewedBucketFreq >= 1 && saltFan >= 1,
-      s"skewedBucketFreq/saltFan must be >= 1, got $skewedBucketFreq/$saltFan")
-    val rows = numHashes / bands
+                      verdictKey: String = ""): DataFrame =
     // NOT checkpointed: shingling + MinHashSig are native codegen'd
     // expressions — cheap to recompute — while materializing the (fat)
     // shingle arrays measured ~10 s per gate at sf10. The benign-case
-    // join sides stay identical (gridSaltedSides' probe short-circuit),
-    // so ReusedExchange computes the banded subtree once, as before the
-    // grid, and hot detection reads only the ~1/probeMod sample.
-    def sigOf(input: DataFrame): DataFrame =
-      input.select(col(idCol).as("id"), shingleSet(col(textCol), k).as("shingles"))
-        .withColumn("sig", minhashSignature(col("shingles"), numHashes))
-    val withSig = sigOf(df)
+    // join sides stay identical (bandSelfJoin's probe short-circuit),
+    // so ReusedExchange computes the banded subtree once, and the probe's
+    // id-hash filter pushes below the shingling: hot detection shingles
+    // only the ~1/probeMod sample.
+    minhashLsh(
+      df.select(col(idCol).as("id"), shingleSet(col(textCol), k).as("shingles"))
+        .withColumn("sig", minhashSignature(col("shingles"), numHashes)),
+      numHashes, bands, threshold, skewedBucketFreq, saltFan,
+      verdictKey, s"mh$k/$numHashes/$bands")
 
+  /** The MinHash-LSH pair body over (id, sig, shingles) rows, with
+    * `shingles` a doc's distinct shingle set — strings in the direct
+    * form, their 64-bit hashes in the store-fed one (one hash per
+    * distinct string shingle, so sizes agree). Bands `sig`, joins the
+    * bands through [[bandSelfJoin]] (id order, each pair once) and
+    * verifies candidates by exact Jaccard over `shingles`.
+    */
+  private def minhashLsh(rows: DataFrame, numHashes: Int, bands: Int,
+                         threshold: Double, skewedBucketFreq: Long, saltFan: Int,
+                         verdictKey: String, verdictTag: String): DataFrame = {
+    require(skewedBucketFreq >= 1 && saltFan >= 1,
+      s"skewedBucketFreq/saltFan must be >= 1, got $skewedBucketFreq/$saltFan")
+    val r = numHashes / bands
     // The band explode carries ONLY (id, band, bucket) into the bucket
     // join — shingle arrays must not ride through it, or every doc's full
     // shingle set is duplicated `bands`× into the shuffle. Candidates are
     // id pairs; the exact-Jaccard verify joins shingles back by id, so
     // each shingle set crosses the wire at most once per side.
-    def bandedOf(ws: DataFrame): DataFrame = ws.select(
+    def bandedOf(sigs: DataFrame): DataFrame = sigs.select(
       col("id"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
         b => struct(b.as("band"),
-          xxhash64(concat_ws(",", slice(col("sig"), b * rows + 1, lit(rows)))).as("bucket")))).as("bb"))
+          xxhash64(concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))).as("bucket")))).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val banded = bandedOf(withSig)
-
+    val sigs = rows.select(col("id"), col("sig"))
     val pm = gridProbeMod(skewedBucketFreq)
-    val (aS, bS) = gridSaltedSides(banded,
-      bandedOf(sigOf(gridProbeRows(df, idCol, pm))), pm,
-      "id", Seq("band", "bucket"), skewedBucketFreq, saltFan,
-      if (verdictKey.isEmpty) "" else s"$verdictKey#mh$k/$numHashes/$bands")
-    val a = aS.alias("a"); val b = bS.alias("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.__salt") === col("b.__salt") &&
-          col("a.__rsalt") === col("b.__rsalt") &&
-          col("a.id") < col("b.id"))
+    val candidates = bandSelfJoin(bandedOf(sigs), bandedOf(gridProbeRows(sigs, "id", pm)),
+        pm, Seq("band", "bucket"), skewedBucketFreq, saltFan, verdictKey, verdictTag)(
+        col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .dropDuplicates("id1", "id2")
 
-    val sh = withSig.select(col("id"), col("shingles"))
+    val sh = rows.select(col("id"), col("shingles"))
     candidates
       .join(sh.as("s1"), col("id1") === col("s1.id"))
       .join(sh.as("s2"), col("id2") === col("s2.id"))
@@ -746,7 +753,8 @@ object Dedup {
     * One corpus pass (plus one shingle-keyed df aggregation, both paid
     * at STORE BUILD time) yields everything every consumer needs:
     *  - [[minhashLshPairsFromArtifacts]] bands from `sig` and verifies
-    *    from `shs`/`sz` (array_intersect is order-insensitive);
+    *    from `shs` (array_intersect is order-insensitive, and `shs`
+    *    holds one hash per distinct shingle, so size(shs) == sz);
     *  - [[ngramJaccardPairsFromArtifacts]] /
     *    [[containmentPairsFromArtifacts]] run the exact prefix-filtered
     *    set-similarity join straight off the sorted arrays: the
@@ -854,66 +862,28 @@ object Dedup {
                                 stopShingleFraction: Double = 0.1): DataFrame = {
     val sh = cutArtifacts(art, nDocs, stopShingleFraction)
       .select(col("id"), col("szc").as("sz"), explode(col("shs")).as("sh"))
-    val a = sh.alias("a"); val b = sh.alias("b")
-    a.join(b, col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"),
-        col("a.sz").as("sz1"), col("b.sz").as("sz2"))
-      .agg(count(lit(1)).as("inter"))
+    postingPairCounts(sh)
       .where(col("inter").cast("double") / least(col("sz1"), col("sz2"))
         >= lit(minCoeff))
   }
 
-  /** [[minhashLshPairs]] over prebuilt [[minhashArtifacts]] — identical
-    * pair set by construction (spec-pinned against the direct call),
-    * different pricing: the shingling + signature corpus pass happened
-    * when the store was written; this plan reads (id, sig) for banding
-    * and (id, sz, shs) for verification. Same hot-bucket grid and
-    * `verdictKey` probe-cache contract as the direct form (the probe
-    * samples the artifact rows by id hash — the identical ~1/probeMod
-    * deterministic sample).
+  /** [[minhashLshPairs]] over prebuilt [[minhashArtifacts]]: the same
+    * body over the store's rows, so the pair set is the direct call's
+    * (spec-pinned). The shingling + signature corpus pass happened when
+    * the store was written; this plan reads (id, sig) for banding and
+    * (id, shs) for verification. Same hot-bucket grid and `verdictKey`
+    * probe-cache contract as the direct form (the probe samples the
+    * artifact rows by id hash — the identical ~1/probeMod deterministic
+    * sample).
     */
   def minhashLshPairsFromArtifacts(art: DataFrame, numHashes: Int = 32,
                                    bands: Int = 8, threshold: Double = 0.5,
                                    skewedBucketFreq: Long = 20000L,
                                    saltFan: Int = 64,
-                                   verdictKey: String = ""): DataFrame = {
-    require(skewedBucketFreq >= 1 && saltFan >= 1,
-      s"skewedBucketFreq/saltFan must be >= 1, got $skewedBucketFreq/$saltFan")
-    val rows = numHashes / bands
-    def bandedOf(ws: DataFrame): DataFrame = ws.select(
-      col("id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          xxhash64(concat_ws(",", slice(col("sig"), b * rows + 1, lit(rows)))).as("bucket")))).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val banded = bandedOf(art.select(col("id"), col("sig")))
-
-    val pm = gridProbeMod(skewedBucketFreq)
-    val (aS, bS) = gridSaltedSides(banded,
-      bandedOf(gridProbeRows(art.select(col("id"), col("sig")), "id", pm)), pm,
-      "id", Seq("band", "bucket"), skewedBucketFreq, saltFan,
-      if (verdictKey.isEmpty) "" else s"$verdictKey#mha/$numHashes/$bands")
-    val a = aS.alias("a"); val b = bS.alias("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.__salt") === col("b.__salt") &&
-          col("a.__rsalt") === col("b.__rsalt") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .dropDuplicates("id1", "id2")
-
-    val sh = art.select(col("id"), col("sz"), col("shs"))
-    candidates
-      .join(sh.as("s1"), col("id1") === col("s1.id"))
-      .join(sh.as("s2"), col("id2") === col("s2.id"))
-      .select(col("id1"), col("id2"),
-        col("s1.sz").as("sz1"), col("s2.sz").as("sz2"),
-        col("s1.shs").as("sh1"), col("s2.shs").as("sh2"))
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", col("inter") / (col("sz1") + col("sz2") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-  }
+                                   verdictKey: String = ""): DataFrame =
+    minhashLsh(art.select(col("id"), col("sig"), col("shs").as("shingles")),
+      numHashes, bands, threshold, skewedBucketFreq, saltFan,
+      verdictKey, s"mha/$numHashes/$bands")
 
   /** 64-bit SimHash over whitespace tokens: bit i is the sign of
     * Σ_tokens (±1 depending on bit i of xxhash64(token)). Native codegen'd
@@ -942,14 +912,28 @@ object Dedup {
                     idCol: String, textCol: String,
                     k: Int = 3, minShingles: Int = 4): DataFrame = {
     require(minShingles >= 1, s"minShingles must be >= 1, got $minShingles")
-    val evalSh = evalSet
-      .select(explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(xxhash64(col("sh0")).as("ev_sh")).distinct()
-    val trainSh = train
-      .select(col(idCol).as("__id"), explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(col("__id"), xxhash64(col("sh0")).as("sh"))
-    val contaminated = trainSh
-      .join(broadcast(evalSh), col("sh") === col("ev_sh"))
+    withoutContaminated(train, idCol, textCol, k, minShingles,
+      broadcast(evalShingles(evalSet, textCol, k)), lit(true))
+  }
+
+  /** The eval side of [[decontaminate]]: its distinct shingle hashes
+    * as one `ev_sh` column.
+    */
+  private def evalShingles(evalSet: DataFrame, textCol: String, k: Int): DataFrame =
+    shingleHashes(evalSet, shingleSet(col(textCol), k), "ev_sh")().distinct()
+
+  /** The training rows of `train` sharing fewer than `minShingles`
+    * distinct shingle hashes with `evalSh` (an `ev_sh` column). Training
+    * shingles failing `prefilter` (over their hash `sh`) are dropped
+    * before the exact join, which alone decides the result.
+    */
+  private def withoutContaminated(train: DataFrame, idCol: String, textCol: String,
+                                  k: Int, minShingles: Int,
+                                  evalSh: DataFrame, prefilter: Column): DataFrame = {
+    val contaminated = shingleHashes(train, shingleSet(col(textCol), k), "sh")(
+        col(idCol).as("__id"))
+      .where(prefilter)
+      .join(evalSh, col("sh") === col("ev_sh"))
       .groupBy("__id").agg(countDistinct(col("sh")).as("__hits"))
       .where(col("__hits") >= minShingles)
       .select(col("__id").as("__contaminated_id"))
@@ -977,25 +961,15 @@ object Dedup {
                            k: Int = 3, minShingles: Int = 4,
                            fpp: Double = 0.01): DataFrame = {
     require(minShingles >= 1, s"minShingles must be >= 1, got $minShingles")
-    val evalSh = evalSet
-      .select(explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(xxhash64(col("sh0")).as("ev_sh")).distinct()
+    val evalSh = evalShingles(evalSet, textCol, k)
     // size the bloom from the actual distinct-shingle count — one small
     // aggregation over the eval side (the cheap side by premise)
     val n = math.max(evalSh.count(), 1L)
     val blob = evalSh.agg(graft.functions.Sketch.bloomAgg(col("ev_sh"), n, fpp))
       .head().getAs[Array[Byte]](0)
-    val trainSh = train
-      .select(col(idCol).as("__id"), explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(col("__id"), xxhash64(col("sh0")).as("sh"))
-      .where(graft.functions.Sketch.mightContain(blob, col("sh")))
-    val contaminated = trainSh
-      .join(evalSh, col("sh") === col("ev_sh")) // exact; no broadcast hint — AQE decides
-      .groupBy("__id").agg(countDistinct(col("sh")).as("__hits"))
-      .where(col("__hits") >= minShingles)
-      .select(col("__id").as("__contaminated_id"))
-    train.join(contaminated,
-      col(idCol) === col("__contaminated_id"), "left_anti")
+    // exact join with no broadcast hint — AQE decides
+    withoutContaminated(train, idCol, textCol, k, minShingles,
+      evalSh, graft.functions.Sketch.mightContain(blob, col("sh")))
   }
 
   /** Contamination MATRIX — the audit report behind [[decontaminate]]:
@@ -1030,13 +1004,10 @@ object Dedup {
                           evalSetCol: String, groupCol: String,
                           k: Int = 3, minShingles: Int = 4): DataFrame = {
     require(minShingles >= 1, s"minShingles must be >= 1, got $minShingles")
-    val evalSh = evalSet
-      .select(col(evalSetCol).as("__set"), explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(col("__set"), xxhash64(col("sh0")).as("ev_sh")).distinct()
-    val trainSh = train
-      .select(col(idCol).as("__id"), col(groupCol).as("__grp"),
-        explode(shingleSet(col(textCol), k)).as("sh0"))
-      .select(col("__id"), col("__grp"), xxhash64(col("sh0")).as("sh"))
+    val evalSh = shingleHashes(evalSet, shingleSet(col(textCol), k), "ev_sh")(
+      col(evalSetCol).as("__set")).distinct()
+    val trainSh = shingleHashes(train, shingleSet(col(textCol), k), "sh")(
+      col(idCol).as("__id"), col(groupCol).as("__grp"))
     val contaminated = trainSh
       .join(broadcast(evalSh), col("sh") === col("ev_sh"))
       .groupBy(col("__set"), col("__id"), col("__grp"))
@@ -1427,7 +1398,7 @@ object Dedup {
     *
     * Hot band buckets — a constant or near-constant hash across a large
     * corpus fraction (every scan of one image, boilerplate text) — join
-    * through the measured 2-D grid salt ([[gridSaltedSides]], threshold
+    * through the measured 2-D grid salt ([[bandSelfJoin]], threshold
     * `skewedBandFreq`), so the inline verify work spreads across
     * fan²-cell tasks instead of one quadratic straggler.
     *
@@ -1453,13 +1424,9 @@ object Dedup {
                      skewedBandFreq: Long = 20000L,
                      saltFan: Int = 64,
                      verdictKey: String = ""): DataFrame = {
-    // Both schemes are only complete for ≤3 differing bits; a larger
-    // radius would silently drop pairs spread across all bands/blocks.
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"hammingPairs64 supports maxHamming in [0,3] (pigeonhole banding), got $maxHamming")
+    val banding = new HammingBanding(wide, maxHamming)
     require(skewedBandFreq >= 1 && saltFan >= 1,
       s"skewedBandFreq/saltFan must be >= 1, got $skewedBandFreq/$saltFan")
-    val (tables, tableKey) = hammingBanding(wide)
     // checkpointed: the (possibly expensive — image/audio decode) hash
     // pass is computed ONCE and reused by the probe AND both join
     // sides. The hash frames here come from mapPartitions decoders —
@@ -1469,56 +1436,64 @@ object Dedup {
     // measure over the checkpointed slim (id, hash) rows — its first
     // action materializes the checkpoint the main query needs anyway,
     // and the aggregation itself reads 8-byte hashes, not media.
-    val hashed = df.select(col(idCol).as("id"), col(hashCol).as("sh"))
-      .where(col("sh").isNotNull)
-      .localCheckpoint(false)
-    val banded = hashed.select(col("id"), col("sh"),
-      explode(array(tables.indices.map(t =>
-        struct(lit(t).as("t"), tableKey(col("sh"), t).as("band"))): _*)).as("tb"))
-      .select(col("id"), col("sh"), col("tb.t"), col("tb.band"))
-    val (aS, bS) = gridSaltedSides(banded, banded, 1,
-      "id", Seq("t", "band"), skewedBandFreq, saltFan,
-      if (verdictKey.isEmpty) "" else s"$verdictKey#hp$maxHamming/$wide")
-    val a = aS.alias("a"); val b = bS.alias("b")
-    // the first table on which this pair's keys agree — a function of
-    // the two hashes, so each qualifying pair survives exactly one t
-    val firstAgree = tables.indices.reverse.foldLeft(lit(tables.size): Column) {
-      (rest, t) =>
-        when(tableKey(col("a.sh"), t) === tableKey(col("b.sh"), t), lit(t))
-          .otherwise(rest)
-    }
-    a.join(b, col("a.t") === col("b.t") && col("a.band") === col("b.band") &&
-        col("a.__salt") === col("b.__salt") &&
-        col("a.__rsalt") === col("b.__rsalt") &&
-        col("a.id") < col("b.id") && col("a.t") === firstAgree &&
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= maxHamming)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
+    val hashed = banding.hashed(df, idCol, hashCol).localCheckpoint(false)
+    val banded = banding.banded(hashed)
+    banding.pairs(bandSelfJoin(banded, banded, 1, Seq("t", "band"),
+        skewedBandFreq, saltFan, verdictKey, s"hp$maxHamming/$wide")(
+      col("a.id") < col("b.id") && banding.matches))
   }
 
-  /** The banding structure behind [[hammingPairs64]]/[[hammingJoin64]]:
-    * the table list and the packed-key expression builder for the
-    * chosen regime (narrow quarters or the Manku-WWW'07 wide scheme).
+  /** The banding both [[hammingPairs64]] and [[hammingJoin64]] run, for
+    * one regime (narrow quarters or the Manku-WWW'07 wide scheme) and
+    * radius: the non-NULL (id, sh) rows, their one-row-per-table banded
+    * form, the match predicate over the join's `a`/`b` aliases (first
+    * agreeing table, hamming bound) and the (id1, id2, hamming) output.
     */
-  private def hammingBanding(wide: Boolean): (Seq[Seq[Int]], (Column, Int) => Column) = {
-    val blocks: Seq[(Int, Int)] = // (bit offset, bit length)
+  private final class HammingBanding(wide: Boolean, maxHamming: Int) {
+    // Both schemes are only complete for ≤3 differing bits; a larger
+    // radius would silently drop pairs spread across all bands/blocks.
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"hamming pairs support maxHamming in [0,3] (pigeonhole banding), got $maxHamming")
+    private val blocks: Seq[(Int, Int)] = // (bit offset, bit length)
       if (wide) Seq((0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10))
       else Seq((0, 16), (16, 16), (32, 16), (48, 16))
-    val tables: Seq[Seq[Int]] =
+    private val tables: Seq[Seq[Int]] =
       if (wide) blocks.indices.combinations(3).map(_.toSeq).toSeq
       else blocks.indices.map(Seq(_))
     assert(tables.size == hammingTableCount(wide))
-    def blockVal(sh: Column, b: Int): Column = {
+    private def blockVal(sh: Column, b: Int): Column = {
       val (off, len) = blocks(b)
       shiftright(sh, off).bitwiseAND((1L << len) - 1L)
     }
     // The table's blocks packed into one long (block values are ≤16 bits
     // and narrow tables are single-block, so 16-bit lanes always fit).
-    def tableKey(sh: Column, t: Int): Column =
+    private def tableKey(sh: Column, t: Int): Column =
       tables(t).zipWithIndex.map { case (b, i) =>
         shiftleft(blockVal(sh, b), i * 16)
       }.reduce(_ bitwiseOR _)
-    (tables, tableKey)
+    private val distance = bit_count(col("a.sh").bitwiseXOR(col("b.sh")))
+
+    def hashed(df: DataFrame, idCol: String, hashCol: String): DataFrame =
+      df.select(col(idCol).as("id"), col(hashCol).as("sh"))
+        .where(col("sh").isNotNull)
+
+    def banded(hashed: DataFrame): DataFrame =
+      hashed.select(col("id"), col("sh"),
+        explode(array(tables.indices.map(t =>
+          struct(lit(t).as("t"), tableKey(col("sh"), t).as("band"))): _*)).as("tb"))
+        .select(col("id"), col("sh"), col("tb.t"), col("tb.band"))
+
+    // the first table on which this pair's keys agree — a function of
+    // the two hashes, so each qualifying pair survives exactly one t
+    private val firstAgree = tables.indices.reverse.foldLeft(lit(tables.size): Column) {
+      (rest, t) =>
+        when(tableKey(col("a.sh"), t) === tableKey(col("b.sh"), t), lit(t))
+          .otherwise(rest)
+    }
+    val matches: Column = col("a.t") === firstAgree && distance <= maxHamming
+
+    def pairs(joined: DataFrame): DataFrame =
+      joined.select(col("a.id").as("id1"), col("b.id").as("id2"), distance.as("hamming"))
   }
 
   /** CROSS-frame hamming pairs — [[hammingPairs64]] between two
@@ -1534,28 +1509,13 @@ object Dedup {
   def hammingJoin64(left: DataFrame, leftId: String, leftHash: String,
                     right: DataFrame, rightId: String, rightHash: String,
                     maxHamming: Int = 3, wide: Boolean = false): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"hammingJoin64 supports maxHamming in [0,3] (pigeonhole banding), got $maxHamming")
-    val (tables, tableKey) = hammingBanding(wide)
+    val banding = new HammingBanding(wide, maxHamming)
     def banded(df: DataFrame, idCol: String, hashCol: String) =
-      df.select(col(idCol).as("id"), col(hashCol).as("sh"))
-        .where(col("sh").isNotNull)
-        .select(col("id"), col("sh"),
-          explode(array(tables.indices.map(t =>
-            struct(lit(t).as("t"), tableKey(col("sh"), t).as("band"))): _*)).as("tb"))
-        .select(col("id"), col("sh"), col("tb.t"), col("tb.band"))
+      banding.banded(banding.hashed(df, idCol, hashCol))
     val a = banded(left, leftId, leftHash).alias("a")
     val b = banded(right, rightId, rightHash).alias("b")
-    val firstAgree = tables.indices.reverse.foldLeft(lit(tables.size): Column) {
-      (rest, t) =>
-        when(tableKey(col("a.sh"), t) === tableKey(col("b.sh"), t), lit(t))
-          .otherwise(rest)
-    }
-    a.join(b, col("a.t") === col("b.t") && col("a.band") === col("b.band") &&
-        col("a.t") === firstAgree &&
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= maxHamming)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
+    banding.pairs(a.join(b,
+      col("a.t") === col("b.t") && col("a.band") === col("b.band") && banding.matches))
   }
 
   /** Edit-distance (Levenshtein ≤ `maxDist`) pairs over the DISTINCT

@@ -97,11 +97,10 @@ object Similarity {
     *
     * Hot buckets (≥ `skewedBucketFreq` members — an adversarial
     * all-near-identical embedding corpus, or a degenerate plane set)
-    * join through the measured 2-D grid salt
-    * ([[graft.dedup.Dedup.gridSaltedSides]] — the hamming joins'
-    * machinery verbatim): each member of a hot bucket carries
-    * salt = hash(id) mod fan on one side and explodes the fan on the
-    * other, so the bucket's f²/2 candidate pairs spread over fan²
+    * join through the measured 2-D grid salt of the one band self-join
+    * every LSH pair operator runs ([[graft.dedup.Dedup.bandSelfJoin]]):
+    * each member of a hot bucket carries salt = hash(id) mod fan on one
+    * side and explodes the fan on the other, so the bucket's f²/2 candidate pairs spread over fan²
     * join blocks instead of landing on one task. The pair set is
     * IDENTICAL (every in-bucket pair meets in exactly one block —
     * spec-pinned); suggestedPlanes keeps buckets ~64 rows so the salt
@@ -116,7 +115,7 @@ object Similarity {
                              skewedBucketFreq: Long = 20000L,
                              saltFan: Int = 64,
                              verdictKey: String = ""): DataFrame = {
-    import graft.dedup.Dedup.{gridProbeMod, gridProbeRows, gridSaltedSides}
+    import graft.dedup.Dedup.{bandSelfJoin, gridProbeMod, gridProbeRows}
     def banded(in: DataFrame, withVec: Boolean) = {
       val cols = if (withVec) Seq(col("id"), col("v"), col("nrm")) else Seq(col("id"))
       in.select(cols :+
@@ -129,15 +128,10 @@ object Similarity {
     val tabled = banded(v, withVec = true)
     val probeMod = gridProbeMod(skewedBucketFreq)
     val probe = banded(gridProbeRows(v, "id", probeMod), withVec = false)
-    val (aS, bS) = gridSaltedSides(tabled, probe, probeMod,
-      "id", Seq("t", "bucket"), skewedBucketFreq, saltFan,
-      if (verdictKey.isEmpty) "" else s"$verdictKey#lsh$numPlanes/$numTables")
-    val a = aS.alias("a"); val b = bS.alias("b")
     val idCond =
       if (ordered) col("a.id") =!= col("b.id") else col("a.id") < col("b.id")
-    a.join(b, col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
-        col("a.__salt") === col("b.__salt") &&
-        col("a.__rsalt") === col("b.__rsalt") && idCond)
+    bandSelfJoin(tabled, probe, probeMod, Seq("t", "bucket"), skewedBucketFreq, saltFan,
+        verdictKey, s"lsh$numPlanes/$numTables")(idCond)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         (dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("cos"))
   }

@@ -199,7 +199,7 @@ object Streams {
     * maintenance (compactTo, occupancySkew) already watches, so there
     * is no per-batch probe job to cache per generation in the first
     * place. If a future store-side band join ever adopts
-    * gridSaltedSides, key its verdict by the index GENERATION (the
+    * Dedup.bandSelfJoin, key its verdict by the index GENERATION (the
     * banded store is immutable within one) and invalidate on
     * maintenance via Dedup.invalidateGridVerdict.
     */

@@ -6,9 +6,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.scalatest.funsuite.AnyFunSuite
-
-class JvmStoreSpec extends AnyFunSuite {
+class JvmStoreSpec extends SparkSpec {
   private def key() = java.util.UUID.randomUUID().toString
 
   test("concurrent callers of one key run the build once and share its path") {
@@ -51,5 +49,23 @@ class JvmStoreSpec extends AnyFunSuite {
     val path = JvmStore("graft-store-spec", k)(_ => ())
     assert(new java.io.File(path).isDirectory)
     assert(JvmStore("graft-store-spec", k)(_ => fail("built twice")) == path)
+  }
+
+  test("a frame store reads back with its written schema, and planning a read runs no job") {
+    import spark.implicits._
+    val k = key()
+    val rows = Seq((1L, "a", 1), (2L, "b", 2), (3L, "c", 2))
+    def store() = JvmStore.frame(spark, "graft-store-spec-frame", k, "n") {
+      rows.toDF("id", "s", "n")
+    }
+    val first = store()
+    assert(first.as[(Long, String, Int)].collect().toSet == rows.toSet)
+    // a bare parquet read infers the schema with a Spark job on every call
+    val jobs = jobsIn("frame-store-spec") {
+      store().where($"n" === 2).queryExecution.executedPlan
+    }
+    assert(jobs == 0, s"planning a store read ran $jobs jobs")
+    assert(store().schema == first.schema)
+    assert(store().where($"n" === 2).select($"id").as[Long].collect().toSet == Set(2L, 3L))
   }
 }

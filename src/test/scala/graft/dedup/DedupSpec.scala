@@ -376,37 +376,41 @@ class DedupSpec extends SparkSpec {
   }
 
   test("duplicateClustersStar labels a small graph within its job budget") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // store-fed pairs, as the d15 family reads them: one parquet file
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-budget").toString
     Seq((2L, 1L), (2L, 3L), (5L, 6L), (7L, 3L), (9L, 9L), (10L, 11L), (11L, 12L), (12L, 10L))
       .toDF("id1", "id2").coalesce(1).write.mode("overwrite").parquet(dir)
     val pairs = spark.read.parquet(dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        Option(s.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("cc-budget-spec") => jobs.incrementAndGet()
-          case Some("cc-budget-sentinel") => sentinel.countDown()
-          case _ =>
-        }
+    var labels = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsIn("cc-budget-spec") {
+      labels = Dedup.duplicateClustersStar(pairs).collect()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup("cc-budget-spec", "connected components job budget")
-      val labels = Dedup.duplicateClustersStar(pairs).collect()
-      // RDD sentinel job in its own group: the listener bus is FIFO, so
-      // once its start has arrived every job of the operator has been counted
-      spark.sparkContext.setJobGroup("cc-budget-sentinel", "job budget sentinel")
-      spark.sparkContext.parallelize(Seq(1)).count()
-      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(labels.length == 10)
-      assert(jobs.get() == 1, s"connected components of an 8-pair graph ran ${jobs.get()} jobs")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    assert(labels.length == 10)
+    assert(jobs == 1, s"connected components of an 8-pair graph ran $jobs jobs")
+  }
+
+  test("minhash LSH pairs run within their job budget, direct and store-fed") {
+    // a small benign corpus: 40 distinct docs plus a near-dup of every
+    // tenth; the keyed verdict is cached by a first construction, so the
+    // count is the warm pair plan's own jobs, construction through collect
+    val rows = (0L until 40L).map(i => (i, s"unique document number $i body alpha$i beta$i gamma$i")) ++
+      (0L until 40L by 10L).map(i => (1000L + i, s"unique document number $i body alpha$i beta$i delta$i"))
+    val corpus = rows.toDF("id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-budget").toString
+    Dedup.minhashArtifacts(corpus, "id", "text").write.mode("overwrite").parquet(dir)
+    val art = spark.read.parquet(dir)
+    def direct() = Dedup.minhashLshPairs(corpus, "id", "text", verdictKey = "spec#lsh-budget")
+    def stored() = Dedup.minhashLshPairsFromArtifacts(art, verdictKey = "spec#lsh-budget")
+    val want = direct().collect().toSet
+    assert(want.nonEmpty && stored().collect().toSet == want)
+    val jobs = Seq("direct" -> (() => direct()), "store-fed" -> (() => stored())).map {
+      case (form, pairs) =>
+        var got = Set.empty[org.apache.spark.sql.Row]
+        val n = jobsIn(s"lsh-budget-$form") { got = pairs().collect().toSet }
+        assert(got == want, form)
+        form -> n
+    }.toMap
+    assert(jobs == Map("direct" -> 4, "store-fed" -> 4), "LSH pair job counts off budget")
   }
 
   test("approxRowCount estimates without a full corpus pass, exact-count fallback on tiny input") {
@@ -417,14 +421,6 @@ class DedupSpec extends SparkSpec {
       k = 3, threshold = 0.3, stopShingleFraction = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaEstimate.contains((1L, 3L)))
-  }
-
-  test("scale entry point applies the stop-shingle cut by default") {
-    val atScale = Dedup.ngramJaccardPairsAtScale(docs, "doc_id", "text",
-      k = 3, threshold = 0.3)
-    val explicit = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.3, stopShingleFraction = 0.1)
-    assert(atScale.collect().toSet == explicit.collect().toSet)
   }
 
   test("minhash band exchange carries only ids and bucket keys, not shingle payloads") {
@@ -764,17 +760,22 @@ class DedupSpec extends SparkSpec {
     val hot = (0L until 120L).map(i => (i, "the same exact document body words"))
     val rows = hot :+ ((999L, "completely different text entirely here"))
     val df = rows.toDF("id", "text")
-    val got = Dedup.minhashLshPairs(df, "id", "text", k = 3, numHashes = 32,
-      bands = 8, threshold = 0.5, skewedBucketFreq = 10L, saltFan = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val want = (for { a <- 0L until 120L; b <- 0L until 120L if a < b }
       yield (a, b, 1.0)).toSet
-    assert(got == want, s"got ${got.size} pairs, want ${want.size}")
-    // the candidate join really is grid-salted (plan joins on salt cols)
-    val plan = Dedup.minhashLshPairs(df, "id", "text", k = 3, numHashes = 32,
-      bands = 8, threshold = 0.5, skewedBucketFreq = 10L, saltFan = 8)
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("__salt") && plan.contains("__rsalt"), plan.take(2000))
+    // the store-fed form over the same corpus's artifact rows takes the
+    // same grid
+    val art = Dedup.minhashArtifacts(df, "id", "text", k = 3, numHashes = 32)
+    for ((form, pairs) <- Seq(
+        "direct" -> (() => Dedup.minhashLshPairs(df, "id", "text", k = 3, numHashes = 32,
+          bands = 8, threshold = 0.5, skewedBucketFreq = 10L, saltFan = 8)),
+        "store-fed" -> (() => Dedup.minhashLshPairsFromArtifacts(art, numHashes = 32,
+          bands = 8, threshold = 0.5, skewedBucketFreq = 10L, saltFan = 8)))) {
+      val got = pairs().collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == want, s"$form: got ${got.size} pairs, want ${want.size}")
+      // the candidate join really is grid-salted (plan joins on salt cols)
+      val plan = pairs().queryExecution.optimizedPlan.toString
+      assert(plan.contains("__salt") && plan.contains("__rsalt"), s"$form: ${plan.take(2000)}")
+    }
     // bounded per-task input: the deterministic id hash spreads the hot
     // bucket's 120 members across all 8 cells per side, no straggler cell
     val cells = df.select(pmod(xxhash64(col("id")), lit(8L)).as("c"))
@@ -812,7 +813,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("grid verdict cache: keyed repeat plan construction runs ZERO Spark jobs, both regimes, pair sets unchanged") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     def mh(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val benign = (0L until 200L).map(i =>
@@ -835,33 +835,15 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // now re-CONSTRUCTING the plans must trigger no job at all: count
     // jobs in a dedicated job group (concurrent suites can't pollute it)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (s.properties != null &&
-            "grid-verdict-spec" == s.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
+    val jobs = jobsIn("grid-verdict-spec") {
+      Seq(benignPairs(), hotPairs(), hamPairs())
+        .foreach(_.queryExecution.executedPlan) // full planning, no action
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup("grid-verdict-spec", "construction must be job-free")
-      val plans = Seq(benignPairs(), hotPairs(), hamPairs())
-      plans.foreach(_.queryExecution.executedPlan) // full planning, no action
-      // sentinel job: the listener bus is FIFO, so once its event has
-      // arrived, any construction-time job's event would have too. An
-      // RDD action, not a DataFrame one — AQE splits df.count() into
-      // one job per query stage, which would miscount the sentinel
-      spark.sparkContext.parallelize(Seq(1)).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (jobs.get() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      spark.sparkContext.clearJobGroup()
-      assert(jobs.get() == 1,
-        s"plan construction ran ${jobs.get() - 1} Spark job(s) — the verdict cache missed")
-      // the cached-verdict plans still compute the exact same pair sets
-      assert(mh(benignPairs()) == benignWant)
-      assert(mh(hotPairs()) == hotWant)
-      assert(hamPairs().collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet == hamWant)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 0, s"plan construction ran $jobs Spark job(s) — the verdict cache missed")
+    // the cached-verdict plans still compute the exact same pair sets
+    assert(mh(benignPairs()) == benignWant)
+    assert(mh(hotPairs()) == hotWant)
+    assert(hamPairs().collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet == hamWant)
   }
 }
